@@ -8,9 +8,12 @@ import java.util.zip.GZIPOutputStream
 
 /** Single-file CSV sinks over the Hadoop FileSystem API — the VPTS exchange
   * contract is ONE ordered CSV per day/month (`vpts.py:278-294`), so these
-  * stream the (already totally-sorted) DataFrame through the driver with
-  * toLocalIterator: partitions arrive in sort order and are never all held
-  * in memory. Works against local paths and s3a:// alike.
+  * stream the (already sorted) DataFrame through the driver with
+  * toLocalIterator: partitions arrive in order, one at a time, and the
+  * driver holds one partition's serialized rows. A canonical VPTS
+  * conversion is a single partition (`Vpts.sortCanonical`), so that is the
+  * whole conversion: about 2 MB for a radar-day. Works against local paths
+  * and s3a:// alike.
   */
 object CsvSink {
 

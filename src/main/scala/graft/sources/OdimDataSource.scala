@@ -4,6 +4,7 @@ import graft.odim.OdimReader
 import graft.vpts.{BirdProfile, Vpts, VptsCsvVersion}
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -31,9 +32,29 @@ class OdimDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     Vpts.schemaV1
 
+  /** A root path that does not exist fails the load with `PATH_NOT_FOUND`,
+    * as parquet does, instead of reading as an empty lake.
+    */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new OdimTable(new CaseInsensitiveStringMap(properties))
+      properties: java.util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    org.apache.spark.sql.GraftSqlBridge.requireExistingPaths(
+      org.apache.spark.sql.SparkSession.active, OdimDataSource.rootPaths(options))
+    new OdimTable(options)
+  }
+}
+
+object OdimDataSource {
+  /** The load's root paths: multi-path load() hands over a JSON-array
+    * "paths" option, single-path a plain "path".
+    */
+  def rootPaths(options: CaseInsensitiveStringMap): Seq[String] =
+    Option(options.get("paths")).map { s =>
+      if (s.startsWith("["))
+        s.substring(1, s.length - 1).split(",").toSeq
+          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+      else s.split(",").toSeq
+    }.orElse(Option(options.get("path")).map(Seq(_))).getOrElse(Seq.empty)
 }
 
 final class OdimTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
@@ -171,15 +192,7 @@ final class OdimScan(options: CaseInsensitiveStringMap,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // multi-path load() hands us a JSON-array "paths" option; single-path a
-    // plain "path"
-    val paths = Option(options.get("paths")).map { s =>
-      if (s.startsWith("["))
-        s.substring(1, s.length - 1).split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-      else s.split(",").toSeq
-    }.getOrElse(Seq(options.get("path")))
-    val listed = paths.flatMap(listH5).sortBy(_.path)
+    val listed = OdimDataSource.rootPaths(options).flatMap(listH5).sortBy(_.path)
     val files =
       if (pruning.isEmpty) listed
       else listed.filter(f => OdimFilePruning.keep(
@@ -239,7 +252,7 @@ final class OdimPartitionReader(files: Seq[OdimFileRef], version: String,
   private val colIdx: Array[Int] = columns.map(ruleset.columns.indexOf)
   private var emitted = 0L
   private val fileIt = files.iterator
-  private var rowIt: Iterator[Seq[String]] = Iterator.empty
+  private var rowIt: Iterator[scala.collection.immutable.ArraySeq[String]] = Iterator.empty
   private var current: InternalRow = _
   private def hadoopConf = conf.value
 
@@ -270,7 +283,10 @@ final class OdimPartitionReader(files: Seq[OdimFileRef], version: String,
     if (limit >= 0 && emitted >= limit) return false // early stop per reader
     if (!rowIt.hasNext && !decodeNextFile()) return false
     val cells = rowIt.next()
-    current = InternalRow.fromSeq(colIdx.toSeq.map(i => UTF8String.fromString(cells(i))))
+    val values = new Array[Any](colIdx.length)
+    var j = 0
+    while (j < colIdx.length) { values(j) = UTF8String.fromString(cells(colIdx(j))); j += 1 }
+    current = new GenericInternalRow(values)
     emitted += 1
     true
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.odim.OdimReader
-import graft.vpts.{BirdProfile, VptsCsvVersion, Vpts}
+import graft.vpts.{BirdProfile, VptsCsvVersion}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -112,9 +112,10 @@ object OdimStream {
       }
     }
     val files = affected.result()
+    // unsorted scan: the writer sorts each day partition by the canonical key
     if (files.nonEmpty)
       graft.lake.VptsLakeWriter.writePartitioned(
-        Vpts.vpts(spark, files, failFast = false), lakeDir)
+        spark.read.format("odim").option("failFast", "false").load(files: _*), lakeDir)
   }
 
   /** Drain all currently-available files into an in-memory table (test/cron

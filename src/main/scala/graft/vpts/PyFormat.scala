@@ -16,60 +16,74 @@ object PyFormat {
     if (d.isPosInfinity) return "inf"
     if (d.isNegInfinity) return "-inf"
     if (d == 0.0) return if (1.0 / d < 0) "-0.0" else "0.0"
-    val neg = d < 0
     val a = math.abs(d)
-    // shortest precision whose %.*e round-trips. Searching up from 0 costs
-    // ~17 String.format calls for full-precision doubles (f32-widened
-    // profile values), so seed from Double.toString's significant-digit
-    // count and verify/minimize around it (round-trip success is monotone
-    // in precision, so the minimum found is identical).
+    // Double.toString gives a round-tripping decimal; take its significant
+    // digits (trailing zeros dropped) and the decimal exponent of the first
     val js = java.lang.Double.toString(a)
     val eIdx = js.indexOf('E')
-    var sig = 0
-    var seenNz = false
-    var ci = 0
     val mantEnd = if (eIdx >= 0) eIdx else js.length
+    val digits = new Array[Char](mantEnd)
+    var n = 0
+    var intLen = 0 // digits before the point
+    var lead = 0 // zero digits before the first significant one
+    var ci = 0
     while (ci < mantEnd) {
       val c = js.charAt(ci)
-      if (c >= '0' && c <= '9') {
-        if (c != '0') seenNz = true
-        if (seenNz) sig += 1
-      }
+      if (c == '.') intLen = lead + n
+      else if (n == 0 && c == '0') lead += 1
+      else { digits(n) = c; n += 1 }
       ci += 1
     }
-    var p = math.max(0, math.min(17, sig - 1))
-    def fmt(pp: Int): String =
-      String.format(java.util.Locale.ROOT, "%." + pp + "e", Double.box(a))
-    var s = fmt(p)
-    if (s.toDouble != a) {
-      while (s.toDouble != a && p < 17) { p += 1; s = fmt(p) }
-    } else {
-      var shrinking = p > 0
-      while (shrinking) {
-        val t = fmt(p - 1)
-        if (t.toDouble == a) { s = t; p -= 1; shrinking = p > 0 }
-        else shrinking = false
+    while (digits(n - 1) == '0') n -= 1
+    val exp0 = intLen - 1 - lead + (if (eIdx >= 0) js.substring(eIdx + 1).toInt else 0)
+    // Shortest round-tripping precision: round the full digit string half-up
+    // to one digit fewer at a time (as `%.*e` does) while the result still
+    // parses back to `a`. Round-trip success is monotone in the digit count,
+    // so the first failure ends the search.
+    val best = digits.clone()
+    var len = n
+    var exp = exp0
+    val cand = new Array[Char](n)
+    var shrinking = n > 1
+    while (shrinking) {
+      val k = len - 1
+      System.arraycopy(digits, 0, cand, 0, k)
+      var e = exp0
+      if (digits(k) >= '5') {
+        var i = k - 1
+        while (i >= 0 && cand(i) == '9') { cand(i) = '0'; i -= 1 }
+        if (i >= 0) cand(i) = (cand(i) + 1).toChar
+        else { cand(0) = '1'; e += 1 } // 9.99 -> 10.0
       }
+      if (java.lang.Double.parseDouble(new String(cand, 0, k) + "E" + (e - k + 1)) == a) {
+        System.arraycopy(cand, 0, best, 0, k)
+        len = k; exp = e; shrinking = k > 1
+      } else shrinking = false
     }
-    // s = "d.dddde±XX"
-    val Array(mant, expStr) = s.split("e")
-    val exp = expStr.toInt
-    val digits = mant.replace(".", "")
-    val body =
-      if (exp >= 16 || exp < -4) {
-        // scientific, python style: 1e+16, 1.234e-05
-        val m = if (digits.length == 1) digits else digits.head + "." + digits.tail
-        val es = (if (exp < 0) "-" else "+") + f"${math.abs(exp)}%02d"
-        s"${m}e$es"
-      } else if (exp >= digits.length - 1) {
-        // integer-valued: pad zeros, add .0
-        digits + "0" * (exp - digits.length + 1) + ".0"
-      } else if (exp >= 0) {
-        digits.substring(0, exp + 1) + "." + digits.substring(exp + 1)
-      } else {
-        "0." + "0" * (-exp - 1) + digits
-      }
-    if (neg) "-" + body else body
+    // python layout: positional iff -4 <= exp < 16
+    val sb = new java.lang.StringBuilder(len + 8)
+    if (d < 0) sb.append('-')
+    if (exp >= 16 || exp < -4) {
+      sb.append(best(0))
+      if (len > 1) sb.append('.').append(best, 1, len - 1)
+      val ax = math.abs(exp)
+      sb.append('e').append(if (exp < 0) '-' else '+')
+      if (ax < 10) sb.append('0')
+      sb.append(ax)
+    } else if (exp >= len - 1) {
+      sb.append(best, 0, len)
+      var z = exp - len + 1
+      while (z > 0) { sb.append('0'); z -= 1 }
+      sb.append(".0")
+    } else if (exp >= 0) {
+      sb.append(best, 0, exp + 1).append('.').append(best, exp + 1, len - exp - 1)
+    } else {
+      sb.append("0.")
+      var z = -exp - 1
+      while (z > 0) { sb.append('0'); z -= 1 }
+      sb.append(best, 0, len)
+    }
+    sb.toString
   }
 
   /** str() of a value that numpy `astype(float32)` produced: the f32 is

@@ -7,20 +7,21 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The core VPTS transforms, Spark-first (`vpts.py:180-275`):
   *
-  *   binaryFile scan -> mapPartitions ODIM decode -> per-level explode ->
-  *   26-column string projection -> canonical total sort
+  *   odim scan (ODIM decode -> per-level rows -> 26 string columns) ->
+  *   canonical sort in one partition
   *
   * The reference's multiprocessing.Pool becomes Spark task parallelism over
-  * the file scan; its pd.concat + sort becomes one range-partitioned total
-  * sort. Duplicate (radar, datetime, height) rows from different source
-  * files are preserved by contract (tests/test_vpts.py:84-91).
+  * the file scan; its pd.concat + sort becomes one shuffle into a single
+  * partition, sorted there. Duplicate (radar, datetime, height) rows from
+  * different source files are preserved by contract
+  * (tests/test_vpts.py:84-91).
   *
-  * Scale notes: ODIM files are ~25 KB (small-file regime) — the binaryFile
-  * source packs many files per task (`spark.sql.files.maxPartitionBytes` /
-  * `openCostInBytes`); decode is executor-side and embarrassingly parallel;
-  * the only shuffle is the final sort, whose key (radar, datetime) matches
-  * the day-partitioned output layout so each output partition is written by
-  * one task.
+  * Scale notes: ODIM files are ~25 KB (small-file regime) — the scan packs
+  * many files per task; decode is executor-side and embarrassingly
+  * parallel. The only consumer of a sorted conversion is one serial writer
+  * (the single CSV of the VPTS exchange contract), so the sort runs in one
+  * task and each file is read and decoded exactly once; a range-partitioned
+  * total sort would decode every file a second time in its sampling job.
   */
 object Vpts {
 
@@ -30,7 +31,7 @@ object Vpts {
   /** Many ODIM VP files -> canonical VPTS DataFrame (reference `vpts()`).
     * Scans through the DSv2 `odim` source (parallel listing + small-file
     * bin-packing; ~2x the binaryFile path on many-file lakes), then applies
-    * the canonical total sort.
+    * the canonical sort.
     */
   def vpts(spark: SparkSession, paths: Seq[String], version: String = "v1.0",
       failFast: Boolean = true): DataFrame = {
@@ -80,41 +81,18 @@ object Vpts {
 
   /** Canonical VPTS sort: radar (str), datetime (str), height (int),
     * source_file (str) (`vpts_csv.py:253-256`, applied `vpts.py:129-134`).
-    * Range-partitioned total sort in Spark.
+    * The input is shuffled into one partition and sorted there: no
+    * range-partitioning sample job, and the scan runs once.
     */
   def sortCanonical(df: DataFrame): DataFrame =
-    df.orderBy(col("radar"), col("datetime"),
+    df.repartition(1).sortWithinPartitions(col("radar"), col("datetime"),
       col("height").cast("int"), col("source_file"))
 
   /** Single ordered CSV file sink (reference `vpts_to_csv`, vpts.py:278-294):
-    * the VPTS exchange contract is ONE sorted CSV, so this is a driver-side
-    * ordered write (toLocalIterator — partitions stream in sort order without
-    * collecting the whole result).
+    * the VPTS exchange contract is ONE sorted CSV ([[graft.lake.CsvSink]]).
     */
-  def vptsToCsv(df: DataFrame, filePath: String): Unit = {
-    val path = java.nio.file.Paths.get(filePath)
-    Option(path.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      java.nio.file.Files.newOutputStream(path), java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      out.write(df.columns.mkString(","))
-      out.write("\n")
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        var i = 0
-        val n = row.length
-        val sb = new StringBuilder
-        while (i < n) {
-          if (i > 0) sb.append(',')
-          sb.append(csvQuote(if (row.isNullAt(i)) "" else row.get(i).toString))
-          i += 1
-        }
-        out.write(sb.toString)
-        out.write("\n")
-      }
-    } finally out.close()
-  }
+  def vptsToCsv(df: DataFrame, filePath: String): Unit =
+    graft.lake.CsvSink.writeSingleCsv(df, filePath)
 
   /** String-preserving VPTS CSV scan (reference S7, `vph5_to_vpts.py:
     * 230-240`): all 26 columns as raw strings, no NA inference — "" and
@@ -152,10 +130,4 @@ object Vpts {
     java.nio.file.Files.createDirectories(dir)
     java.nio.file.Files.writeString(dir.resolve("vpts.resource.json"), json)
   }
-
-  /** pandas to_csv minimal quoting. */
-  private def csvQuote(s: String): String =
-    if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
 }

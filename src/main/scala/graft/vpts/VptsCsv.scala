@@ -1,6 +1,7 @@
 package graft.vpts
 
 import PyFormat._
+import scala.collection.immutable.ArraySeq
 
 /** Versioned VPTS-CSV output ruleset: the Spark-side equivalent of
   * `AbstractVptsCsv` + `VptsCsvV1` (+ registry `get_vpts_version`),
@@ -14,8 +15,10 @@ trait VptsCsvVersion extends Serializable {
   def undetect: String
   /** Ordered column names (order IS the output spec). */
   def columns: Seq[String]
-  /** One profile -> one string row per altitude level. */
-  def rows(p: BirdProfile): Seq[Seq[String]]
+  /** One profile -> one string row per altitude level, each row indexed
+    * in [[columns]] order.
+    */
+  def rows(p: BirdProfile): IndexedSeq[ArraySeq[String]]
 }
 
 final class VptsCsvVersionError(msg: String) extends RuntimeException(msg)
@@ -86,30 +89,36 @@ object VptsCsvV1 extends VptsCsvVersion {
     else throw new IllegalArgumentException(
       s"Incorrect source_file '$sf': must not start with '../', './' or '/'")
 
-  def rows(p: BirdProfile): Seq[Seq[String]] = {
+  def rows(p: BirdProfile): IndexedSeq[ArraySeq[String]] = {
     val radar = p.identifiers.getOrElse("NOD",
       sys.error(s"${p.sourceFile}: no NOD identifier in what.source"))
-    val rcs = pyFloat(attrNum(p.how, "rcs_bird"))
-    val sdThresh = pyFloat(attrNum(p.how, "sd_vvp_thresh"))
-    val vcp = renderVcp(p.how)
-    val lat = pyFloat(roundHalfEven(attrNum(p.where, "lat"), 6))
-    val lon = pyFloat(roundHalfEven(attrNum(p.where, "lon"), 6))
-    val height = attrNum(p.where, "height").toLong.toString
-    val wavelength = pyFloat(roundHalfEven(attrNum(p.how, "wavelength"), 6))
-    val sf = checkSourceFile(p.sourceFile)
-    p.levels.indices.map { i =>
-      def v(q: String): String = {
-        val cells = p.variables.getOrElse(q, Seq.empty)
-        if (i < cells.size) renderCell(cells(i)) else nodata
-      }
-      Seq(radar, p.datetimeIso, p.levels(i).toString) ++
-        varCols.map { case (colName, q) =>
-          if (colName == "gap") {
-            val cells = p.variables.getOrElse(q, Seq.empty)
-            if (i < cells.size) renderBool(cells(i)) else nodata
-          } else v(q)
-        } ++
-        Seq(rcs, sdThresh, vcp, lat, lon, height, wavelength, sf)
+    val levels = p.levels.toIndexedSeq
+    val n = levels.size
+    val out = Array.fill(n)(new Array[String](columns.size))
+    // filled column by column: each column's source is looked up once
+    var col = 0
+    def fill(cell: Int => String): Unit = {
+      var i = 0
+      while (i < n) { out(i)(col) = cell(i); i += 1 }
+      col += 1
     }
+    def const(s: String): Unit = fill(_ => s)
+    const(radar)
+    const(p.datetimeIso)
+    fill(i => levels(i).toString)
+    varCols.foreach { case (colName, q) =>
+      val cells = p.variables.getOrElse(q, Seq.empty).toIndexedSeq
+      val render: VpCell => String = if (colName == "gap") renderBool else renderCell
+      fill(i => if (i < cells.size) render(cells(i)) else nodata)
+    }
+    const(pyFloat(attrNum(p.how, "rcs_bird")))
+    const(pyFloat(attrNum(p.how, "sd_vvp_thresh")))
+    const(renderVcp(p.how))
+    const(pyFloat(roundHalfEven(attrNum(p.where, "lat"), 6)))
+    const(pyFloat(roundHalfEven(attrNum(p.where, "lon"), 6)))
+    const(attrNum(p.where, "height").toLong.toString)
+    const(pyFloat(roundHalfEven(attrNum(p.how, "wavelength"), 6)))
+    const(checkSourceFile(p.sourceFile))
+    ArraySeq.unsafeWrapArray(out.map(ArraySeq.unsafeWrapArray(_)))
   }
 }

@@ -21,6 +21,18 @@ object GraftSqlBridge {
     * parallelized, and free of RawLocalFileSystem's per-file permission
     * exec that makes naive listFiles() pathological on many small files).
     */
+  /** Fails the way a parquet load of a missing path does: `PATH_NOT_FOUND`
+    * naming the qualified path.
+    */
+  def requireExistingPaths(spark: SparkSession, paths: Seq[String]): Unit =
+    paths.foreach { p =>
+      val hp = new org.apache.hadoop.fs.Path(p)
+      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val qualified = fs.makeQualified(hp)
+      if (!fs.exists(qualified))
+        throw errors.QueryCompilationErrors.dataPathNotExistError(qualified.toString)
+    }
+
   def listFilesRecursive(spark: SparkSession, paths: Seq[String]): Seq[(String, Long)] = {
     val index = new execution.datasources.InMemoryFileIndex(
       spark.asInstanceOf[classic.SparkSession],

@@ -1,6 +1,8 @@
 package graft.sources
 
-import graft.vpts.SparkTestSession
+import graft.vpts.{SparkTestSession, VpLakeFixture}
+import java.nio.file.Files
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DSv2 "odim" format must agree with the mapPartitions pipeline. */
@@ -63,15 +65,37 @@ class OdimDataSourceSpec extends AnyFunSuite {
     assert(df.count() == 25)
   }
 
+  /** A lake of one HDF5 file that is not ODIM. */
+  private lazy val noOdimDir: String = {
+    val d = Files.createTempDirectory("vp_no_odim_h5")
+    Files.write(d.resolve("dummy.h5"), VpLakeFixture.nonOdimBytes)
+    d.toString
+  }
+
   test("failFast=false skips corrupt files") {
     val df = spark.read.format("odim")
       .option("failFast", "false")
-      .load("/root/reference/tests/data/vp_no_odim_h5")
+      .load(noOdimDir)
     assert(df.count() == 0)
   }
 
   test("failFast default surfaces corrupt files as task failures") {
-    val df = spark.read.format("odim").load("/root/reference/tests/data/vp_no_odim_h5")
+    val df = spark.read.format("odim").load(noOdimDir)
     assertThrows[org.apache.spark.SparkException](df.count())
+  }
+
+  test("a missing path fails the load with PATH_NOT_FOUND, as parquet does") {
+    val root = Files.createTempDirectory("odim_paths")
+    val missing = root.resolve("no_such_dir").toString
+    val err = intercept[AnalysisException](spark.read.format("odim").load(missing))
+    val parquetErr = intercept[AnalysisException](spark.read.parquet(missing))
+    assert(err.getCondition == "PATH_NOT_FOUND")
+    assert(err.getMessage == parquetErr.getMessage)
+    // an existing but empty directory is an empty lake
+    val empty = Files.createDirectory(root.resolve("empty")).toString
+    assert(spark.read.format("odim").load(empty).count() == 0)
+    // one missing path among several fails the whole load
+    val err2 = intercept[AnalysisException](spark.read.format("odim").load(empty, missing))
+    assert(err2.getCondition == "PATH_NOT_FOUND")
   }
 }

@@ -41,7 +41,10 @@ class VptsGoldenSpec extends AnyFunSuite {
   }
 
   test("canonical sort is idempotent") {
-    val df = Vpts.vpts(spark, Seq(fixtureDir))
+    val lake = Files.createTempDirectory("vpts_idem")
+    VpLakeFixture.writeLake(lake, Seq("nosta", "bejab"), "20230311",
+      Seq("231500", "000000", "120500"), Set("000000"), seed = 3)
+    val df = Vpts.vpts(spark, Seq(lake.toString))
     val once = df.collect().map(_.toSeq)
     val twice = Vpts.sortCanonical(df).collect().map(_.toSeq)
     assert(once.sameElements(twice) || once.toSeq == twice.toSeq)
