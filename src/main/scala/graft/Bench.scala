@@ -49,23 +49,27 @@ object Bench {
     // process-lifetime state (Tables readers, staged artifacts, the
     // pinned funnel-prep memo) untouched, so every timed run still
     // computes from the parquet inputs exactly as before.
-    def timeOnce(q: QueryDef): Double = {
+    //
+    // A query that throws is named on both output lines and left out of
+    // the total, never timed as a fast run; the process then exits nonzero.
+    val failed = collection.mutable.LinkedHashSet.empty[String]
+    def timeOnce(q: QueryDef): Option[Double] = {
       val t0 = System.nanoTime()
-      try materialize(q) catch { case _: Throwable => }
-      val dt = (System.nanoTime() - t0) / 1e9
-      CheckpointScope.drain()
-      dt
+      try { materialize(q); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] ${q.name} failed: $e")
+        failed += q.name
+        None
+      }
+      finally CheckpointScope.drain()
     }
 
     // warmup: JVM/codegen/scan caches (not timed)
-    benchQueries.foreach { q =>
-      try materialize(q) catch { case _: Throwable => }
-      CheckpointScope.drain()
-    }
+    benchQueries.foreach(timeOnce)
 
-    val results = benchQueries.map { q =>
-      val runs = (1 to 3).map(_ => timeOnce(q)).sorted
-      (q.name, runs(1), runs(2) - runs(0))
+    val results = benchQueries.filterNot(q => failed(q.name)).flatMap { q =>
+      val runs = (1 to 3).flatMap(_ => timeOnce(q)).sorted
+      if (runs.size == 3) Some((q.name, runs(1), runs(2) - runs(0))) else None
     }
     // fixed per-query floor: an empty job through the same timed path
     // (scheduler + noop-sink commit) — lets BASELINE.md separate engine
@@ -87,7 +91,8 @@ object Bench {
       .mkString("{", ",", "}")
     val spreads = results.map { case (k, _, s) => "\"" + k + "\":" + s }
       .mkString("{", ",", "}")
-    println(s"""{"bench_detail":{"total":$total,"queries":$qsFull,"spread":$spreads,"floor":$floor,"runs":3,"sf":"$sfDir"}}""")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(s"""{"bench_detail":{"total":$total,"queries":$qsFull,"spread":$spreads,"failed":$failedJson,"floor":$floor,"runs":3,"sf":"$sfDir"}}""")
     // THE contract line, last and compact: seconds rounded to 3 decimals
     // (~0.001 s precision against a ±0.2 s host noise floor) keep the
     // whole line < 2000 chars — ~1430 for 48 queries, headroom for ~15
@@ -95,7 +100,8 @@ object Bench {
     def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
     val qs3 = results.map { case (k, v, _) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs3,"floor":${f3(floor)},"runs":3,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs3,"failed":$failedJson,"floor":${f3(floor)},"runs":3,"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -80,7 +80,7 @@ object Vph5ToVpts {
         }
       case None =>
         val inventory = opts.getOrElse("--inventory", sys.error("--inventory or --path-folder required"))
-        // 0 expands to the full bucket age inside Inventory.daysToRebuild
+        // 0 expands to the full bucket age (Inventory.cutoff)
         if (modifiedDaysAgo == 0)
           println("Recreate the full set of bucket files. This will take a while!")
         val (d, m) = LakeController.run(spark, bucket, inventory, modifiedDaysAgo,

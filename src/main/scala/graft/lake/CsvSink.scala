@@ -1,9 +1,11 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.DataFrame
-import java.io.{BufferedWriter, OutputStreamWriter}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.{BufferedReader, BufferedWriter, ByteArrayOutputStream, InputStreamReader,
+  OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutionException, Executors, Future}
 import java.util.zip.GZIPOutputStream
 
 /** Single-file CSV sinks over the Hadoop FileSystem API — the VPTS exchange
@@ -17,8 +19,8 @@ import java.util.zip.GZIPOutputStream
   */
 object CsvSink {
 
-  def fs(df: DataFrame, path: String): FileSystem =
-    new HPath(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+  def fs(spark: SparkSession, path: String): FileSystem =
+    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** pandas to_csv minimal quoting. */
   def csvQuote(s: String): String =
@@ -26,13 +28,18 @@ object CsvSink {
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
 
-  def writeSingleCsv(df: DataFrame, path: String, gzip: Boolean = false): Unit = {
+  private def create(filesystem: FileSystem, path: String): OutputStream = {
     val hp = new HPath(path)
-    val filesystem = fs(df, path)
     Option(hp.getParent).foreach(filesystem.mkdirs(_))
-    val raw = filesystem.create(hp, true)
-    val stream = if (gzip) new GZIPOutputStream(raw) else raw
-    val out = new BufferedWriter(new OutputStreamWriter(stream, StandardCharsets.UTF_8))
+    filesystem.create(hp, true)
+  }
+
+  private def writer(stream: OutputStream): BufferedWriter =
+    new BufferedWriter(new OutputStreamWriter(stream, StandardCharsets.UTF_8))
+
+  def writeSingleCsv(df: DataFrame, path: String, gzip: Boolean = false): Unit = {
+    val raw = create(fs(df.sparkSession, path), path)
+    val out = writer(if (gzip) new GZIPOutputStream(raw) else raw)
     try {
       out.write(df.columns.mkString(","))
       out.write("\n")
@@ -52,38 +59,96 @@ object CsvSink {
     } finally out.close()
   }
 
+  /** Writes rows the driver already holds (the coverage.csv cut from the
+    * collected inventory aggregate) in [[writeSingleCsv]]'s format, with no
+    * Spark job.
+    */
+  def writeCsv(spark: SparkSession, path: String, header: Seq[String],
+      rows: Seq[Seq[String]]): Unit = {
+    val out = writer(create(fs(spark, path), path))
+    try {
+      out.write(header.mkString(","))
+      out.write("\n")
+      rows.foreach { r => out.write(r.map(csvQuote).mkString(",")); out.write("\n") }
+    } finally out.close()
+  }
+
+  /** One input's share of a concatenation: its header line (null for an
+    * empty file) and its body lines, encoded.
+    */
+  private final class Part(val header: String, val body: Array[Byte])
+
+  private def encode(gzip: Boolean)(write: BufferedWriter => Unit): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = writer(if (gzip) new GZIPOutputStream(bytes) else bytes)
+    try write(out) finally out.close()
+    bytes.toByteArray
+  }
+
+  private def readPart(filesystem: FileSystem, in: String, gzip: Boolean): Part = {
+    val reader = new BufferedReader(
+      new InputStreamReader(filesystem.open(new HPath(in)), StandardCharsets.UTF_8))
+    try {
+      val header = reader.readLine()
+      var line = if (header == null) null else reader.readLine()
+      val body =
+        if (line == null) Array.emptyByteArray
+        else encode(gzip) { out =>
+          while (line != null) {
+            out.write(line)
+            out.write("\n")
+            line = reader.readLine()
+          }
+        }
+      new Part(header, body)
+    } finally reader.close()
+  }
+
   /** Concatenate already-written daily CSVs (sorted file order, header kept
-    * once) into one optionally-gzipped monthly CSV — the reference's
+    * once, taken from the first non-empty file; every line re-terminated
+    * with `\n`) into one optionally-gzipped monthly CSV — the reference's
     * string-preserving pd.concat + to_csv round-trip (`vph5_to_vpts.py:
     * 230-245`) is byte-equivalent to header-stripping concatenation because
     * both sides use minimal quoting over unchanged strings.
+    *
+    * Inputs are read and compressed on `availableProcessors` threads, each
+    * into its own gzip member, and the members are written in input order:
+    * the header as one member, then one per non-empty body. A file of
+    * several members is one gzip file (RFC 1952 §2.2) whose decompressed
+    * bytes are the members' in order; `gzip -t`, `zcat`, Python's `gzip` and
+    * `pandas.read_csv` read all of it. At most two members per thread are
+    * held in memory at once.
     */
-  def concatCsvFiles(df: DataFrame, inputs: Seq[String], outPath: String,
+  def concatCsvFiles(spark: SparkSession, inputs: Seq[String], outPath: String,
       gzip: Boolean): Unit = {
-    val filesystem = fs(df, outPath)
-    val hp = new HPath(outPath)
-    Option(hp.getParent).foreach(filesystem.mkdirs(_))
-    val raw = filesystem.create(hp, true)
-    val out = if (gzip) new GZIPOutputStream(raw) else raw
+    val filesystem = fs(spark, outPath)
+    val threads = Runtime.getRuntime.availableProcessors()
+    val pool = Executors.newFixedThreadPool(threads)
     try {
-      var first = true
-      inputs.foreach { in =>
-        val is = filesystem.open(new HPath(in))
-        val reader = new java.io.BufferedReader(
-          new java.io.InputStreamReader(is, StandardCharsets.UTF_8))
-        try {
-          var line = reader.readLine() // header
-          if (first && line != null) {
-            out.write((line + "\n").getBytes(StandardCharsets.UTF_8))
-            first = false
+      val out = create(filesystem, outPath)
+      try {
+        val pending = new java.util.ArrayDeque[Future[Part]]()
+        val todo = inputs.iterator
+        def refill(): Unit = while (pending.size < 2 * threads && todo.hasNext) {
+          val in = todo.next()
+          pending.add(pool.submit(() => readPart(filesystem, in, gzip)))
+        }
+        var headerWritten = false
+        refill()
+        while (!pending.isEmpty) {
+          val part =
+            try pending.poll().get()
+            catch { case e: ExecutionException => throw e.getCause }
+          refill()
+          if (!headerWritten && part.header != null) {
+            out.write(encode(gzip)(_.write(part.header + "\n")))
+            headerWritten = true
           }
-          line = reader.readLine()
-          while (line != null) {
-            out.write((line + "\n").getBytes(StandardCharsets.UTF_8))
-            line = reader.readLine()
-          }
-        } finally reader.close()
-      }
-    } finally out.close()
+          out.write(part.body)
+        }
+        // all inputs empty: still a valid (empty) gzip file
+        if (!headerWritten && gzip) out.write(encode(gzip)(_ => ()))
+      } finally out.close()
+    } finally pool.shutdownNow()
   }
 }

@@ -8,6 +8,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * `vph5_to_vpts` CLI (`vph5_to_vpts.py:59-251`): inventory -> coverage +
   * days-to-rebuild -> per-day daily VPTS rebuild -> per-month concat.
   *
+  * The inventory is read in one scan. Each monthly file is multi-member
+  * gzip (RFC 1952 §2.2), one member per daily file, compressed in
+  * parallel; `gzip -t`, `zcat`, Python's `gzip` and `pandas.read_csv` read
+  * every row of such a file.
+  *
   * Recompute granularity is the whole radar-day (the reference's
   * day-granularity late-data handling): any modified file re-derives its day
   * and month. Each day is an independent Spark job over ~100 small h5 files;
@@ -47,10 +52,11 @@ object LakeController {
 
   /** Rebuild one radar-month: concat its daily CSVs (sorted, month-filtered
     * file list) into the gzipped monthly file (`vph5_to_vpts.py:214-248`).
+    * The file is multi-member gzip, one member per daily file
+    * ([[CsvSink.concatCsvFiles]]).
     */
   def rebuildMonth(spark: SparkSession, bucket: String, month: MonthKey): Unit = {
-    val dummy = spark.emptyDataFrame
-    val filesystem = CsvSink.fs(dummy, month.dailyFolder(bucket))
+    val filesystem = CsvSink.fs(spark, month.dailyFolder(bucket))
     val folder = new HPath(month.dailyFolder(bucket))
     val files =
       if (filesystem.exists(folder))
@@ -59,18 +65,22 @@ object LakeController {
           .sorted
       else Seq.empty
     if (files.nonEmpty)
-      CsvSink.concatCsvFiles(dummy, files, month.monthlyCsvPath(bucket), gzip = true)
+      CsvSink.concatCsvFiles(spark, files, month.monthlyCsvPath(bucket), gzip = true)
   }
 
   /** Full incremental run from an inventory file (manifest path of the CLI).
-    * Returns (n_days_rebuilt, n_months_rebuilt).
+    * The inventory is scanned once ([[Inventory.dayCounts]]); coverage.csv
+    * and the days to rebuild are cut from its collected radar-day rows on
+    * the driver. Returns (n_days_rebuilt, n_months_rebuilt).
     */
   def run(spark: SparkSession, bucket: String, inventoryPath: String,
       modifiedDaysAgo: Int, now: java.time.Instant,
       coverageOut: Option[String] = None): (Int, Int) = {
-    val inv = Inventory.read(spark, inventoryPath)
-    coverageOut.foreach(p => CsvSink.writeSingleCsv(Inventory.coverage(inv), p))
-    val days = dayKeys(Inventory.daysToRebuild(inv, modifiedDaysAgo, now))
+    val counts = Inventory.collectDayCounts(Inventory.read(spark, inventoryPath),
+      Inventory.cutoff(modifiedDaysAgo, now))
+    coverageOut.foreach(p => CsvSink.writeCsv(spark, p, Inventory.CoverageColumns,
+      Inventory.coverageRows(counts).map { case (dir, n) => Seq(dir, n.toString) }))
+    val days = Inventory.modifiedDays(counts).map(d => DayKey(d.source, d.radar, d.yyyy, d.mm, d.dd))
     var okDays = 0
     days.foreach { d =>
       try { rebuildDay(spark, bucket, d); okDays += 1 }
