@@ -113,6 +113,12 @@ object VptsOps {
     */
   private lazy val ingestCorpus: String = stagedCorpus(400)
 
+  /** The reference VP fixtures [[stagedCorpus]] copies: vptstools'
+    * `tests/data/vp` bejab day (5 files).
+    */
+  val OdimIngestFixtureDir: java.nio.file.Path =
+    java.nio.file.Paths.get("/root/reference/tests/data/vp/bejab/2022/11/11")
+
   /** Stage `copies` x the 5 reference VP fixtures into /tmp (atomic-rename
     * protocol, [[Staging.stagedDir]] — a half-staged corpus is never
     * observable, concurrent first runs are safe, and the fixture listing
@@ -124,8 +130,7 @@ object VptsOps {
   private def stagedCorpus(copies: Int): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     Staging.stagedDir(Paths.get(s"/tmp/graft_odim_ingest_corpus_$copies")) { tmp =>
-      val src = Paths.get("/root/reference/tests/data/vp/bejab/2022/11/11")
-      val listing = Files.list(src)
+      val listing = Files.list(OdimIngestFixtureDir)
       val srcFiles =
         try listing.sorted.toArray.map(_.asInstanceOf[java.nio.file.Path])
         finally listing.close()

@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.vpts.SparkTestSession
+import graft.vpts.{SparkTestSession, VpLakeFixture}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -12,12 +12,12 @@ class CliSpec extends AnyFunSuite {
     val src = Files.createTempDirectory("ftp")
     val dst = Files.createTempDirectory("lake")
     // stage: 2 VP files + 1 PVOL (must be ignored)
-    val vpDir = Paths.get("/root/reference/tests/data/inventory/vp")
+    val vpDir = VpLakeFixture.fullLake(VpLakeFixture.nostaDay(3))
     val vps = Files.list(vpDir).sorted.toArray.take(2)
       .map(_.asInstanceOf[java.nio.file.Path])
     vps.foreach(f => Files.copy(f, src.resolve(f.getFileName)))
-    Files.copy(Paths.get("/root/reference/tests/data/odimh5/bewid_pvol_20170214T0000Z_0x1.h5"),
-      src.resolve("bewid_pvol_20170214T0000Z_0x1.h5"))
+    Files.write(src.resolve("bewid_pvol_20170214T0000Z_0x1.h5"),
+      VpLakeFixture.pvolBytes("bewid", "20170214", "000000"))
 
     val n1 = TransferBaltrad.sync(spark, src.toString, dst.toString, "baltrad")
     assert(n1 == 2) // PVOL filtered out

@@ -125,7 +125,9 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("validate op reports zero errors on golden output and catches bad cells") {
-    val df = graft.vpts.Vpts.vpts(spark, Seq(s"$invDir/vp"))
+    // five nosta profiles of one day, like the reference's inventory/vp
+    val vpDir = graft.vpts.VpLakeFixture.fullLake(graft.vpts.VpLakeFixture.nostaDay(5))
+    val df = graft.vpts.Vpts.vpts(spark, Seq(vpDir.toString))
     val report = graft.vpts.Validate.validateVpts(df)
     assert(report.errors == 0, s"unexpected violations: ${report.byRule.filter(_._2 > 0)}")
     import org.apache.spark.sql.functions._

@@ -1,14 +1,13 @@
 package graft.odim
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
 /** Decode micro-profile: keeps the per-file cost visible and guards
   * against rendering regressions (rows rendering was 2 ms/file before the
   * pyFloat precision-seed fix; now well under 1 ms).
   */
 class DecodeProfSpec extends AnyFunSuite {
   test("profile single-file decode") {
-    val bytes = Files.readAllBytes(Paths.get(
-      "/root/reference/tests/data/inventory/vp/nosta_vp_20230311T231500Z_0xb.h5"))
+    // one full profile: 16 quantities x 25 levels
+    val bytes = graft.vpts.VpLakeFixture.fullVpBytes("nosta", "20230311", "231500", 1)
     def run(n: Int): Double = {
       val t0 = System.nanoTime()
       var i = 0

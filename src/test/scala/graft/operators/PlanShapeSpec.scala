@@ -156,8 +156,13 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("no query plan contains a cartesian product or nested-loop join on big sides") {
     // BroadcastNestedLoopJoin with a one-row build side is fine (the ivf
-    // argmin); CartesianProduct is never fine
-    graft.Registry.all.foreach { q =>
+    // argmin); CartesianProduct is never fine. q_odim_ingest stages its
+    // corpus from the reference VP fixtures, so it is planned only where
+    // they exist.
+    val haveFixtures = java.nio.file.Files.isDirectory(VptsOps.OdimIngestFixtureDir)
+    if (!haveFixtures)
+      info(s"q_odim_ingest not planned: ${VptsOps.OdimIngestFixtureDir} is not a directory")
+    graft.Registry.all.filter(q => haveFixtures || q.name != "q_odim_ingest").foreach { q =>
       val p = plan(q.fn(spark, sfDir))
       assert(!p.contains("CartesianProduct"), s"${q.name} plans a cartesian product:\n$p")
     }

@@ -10,11 +10,13 @@ class OdimDataSourceSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  private lazy val vpDir: String = VpLakeFixture.fullLake(VpLakeFixture.ReferenceVpLayout).toString
+
   test("format(\"odim\") reads the VP fixtures into the VPTS schema") {
-    val df = spark.read.format("odim").load("/root/reference/tests/data/vp")
+    val df = spark.read.format("odim").load(vpDir)
     assert(df.schema == graft.vpts.Vpts.schemaV1)
     assert(df.count() == 150)
-    val viaPipeline = graft.vpts.Vpts.vptsViaBinaryFile(spark, Seq("/root/reference/tests/data/vp"))
+    val viaPipeline = graft.vpts.Vpts.vptsViaBinaryFile(spark, Seq(vpDir))
       .collect().map(_.toSeq.mkString("|")).sorted
     val viaSource = graft.vpts.Vpts.sortCanonical(df)
       .collect().map(_.toSeq.mkString("|")).sorted
@@ -23,7 +25,7 @@ class OdimDataSourceSpec extends AnyFunSuite {
 
   test("column pruning and limit reach the odim scan") {
     import org.apache.spark.sql.functions._
-    val df = spark.read.format("odim").load("/root/reference/tests/data/vp")
+    val df = spark.read.format("odim").load(vpDir)
       .select(col("radar"), col("height")).limit(3)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("columns=radar,height"), s"pruning missing in:\n$plan")
@@ -33,7 +35,7 @@ class OdimDataSourceSpec extends AnyFunSuite {
 
   test("radar/datetime predicates prune files at planning time") {
     import org.apache.spark.sql.functions._
-    val root = "/root/reference/tests/data/vp" // 5 bejab files + 1 bewid
+    val root = vpDir // 5 bejab files + 1 bewid
     // radar equality prunes the listing down to the single bewid file
     OdimScan.lastPlannedFileCount = -1
     val bewid = spark.read.format("odim").load(root)
@@ -61,7 +63,7 @@ class OdimDataSourceSpec extends AnyFunSuite {
 
   test("single-file load works (vp() path)") {
     val df = spark.read.format("odim").load(
-      "/root/reference/tests/data/vp/bewid/bewid_vp_20221113T023500Z_0xb.h5")
+      s"$vpDir/bewid/bewid_vp_20221113T023500Z_0xb.h5")
     assert(df.count() == 25)
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.vpts.SparkTestSession
+import graft.vpts.{SparkTestSession, VpLakeFixture}
 import org.scalatest.funsuite.AnyFunSuite
 
 class SessionizeSpec extends AnyFunSuite {
@@ -71,7 +71,8 @@ class SessionizeSpec extends AnyFunSuite {
 
   test("partitioned lake writer round-trips with pruning layout") {
     val dir = java.nio.file.Files.createTempDirectory("vptslake").toString
-    val df = graft.vpts.Vpts.vpts(spark, Seq("/root/reference/tests/data/vp"))
+    val vpDir = VpLakeFixture.fullLake(VpLakeFixture.ReferenceVpLayout).toString
+    val df = graft.vpts.Vpts.vpts(spark, Seq(vpDir))
     graft.lake.VptsLakeWriter.writePartitioned(df, dir)
     // layout: p_radar=bejab/p_year=2022/p_month=11/p_day=11
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(

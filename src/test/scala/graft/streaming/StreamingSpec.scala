@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.vpts.SparkTestSession
+import graft.vpts.{SparkTestSession, VpLakeFixture}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming/batch parity and multimodal plumbing checks on sf0.001. */
@@ -8,6 +8,8 @@ class StreamingSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  private lazy val vpDir = VpLakeFixture.fullLake(VpLakeFixture.ReferenceVpLayout)
 
   test("AvailableNow streaming tumbling agg equals the batch query") {
     val streamed = EventStream.runAvailableNow(spark, sfDir, "stream_tumbling_test")
@@ -70,7 +72,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming ODIM ingestion equals the batch conversion") {
-    val dir = "/root/reference/tests/data/vp"
+    val dir = vpDir.toString
     val streamed = OdimStream.drainAvailable(spark, dir, "odim_stream_test")
     val batch = graft.vpts.Vpts.vpts(spark, Seq(dir))
     assert(streamed.count() == 150)
@@ -84,7 +86,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
     val in = java.nio.file.Files.createTempDirectory("in")
     // first arrival: one bejab file
-    val src = java.nio.file.Paths.get("/root/reference/tests/data/vp/bejab/2022/11/11")
+    val src = vpDir.resolve("bejab/2022/11/11")
     val files = java.nio.file.Files.list(src).sorted.toArray
       .map(_.asInstanceOf[java.nio.file.Path])
     java.nio.file.Files.copy(files(0), in.resolve(files(0).getFileName))
@@ -110,7 +112,7 @@ class StreamingSpec extends AnyFunSuite {
     val lake = java.nio.file.Files.createTempDirectory("xolake").toString
     val ckpt = java.nio.file.Files.createTempDirectory("xockpt").toString
     val in = java.nio.file.Files.createTempDirectory("xoin")
-    val src = java.nio.file.Paths.get("/root/reference/tests/data/vp/bejab/2022/11/11")
+    val src = vpDir.resolve("bejab/2022/11/11")
     val files = java.nio.file.Files.list(src).sorted.toArray
       .map(_.asInstanceOf[java.nio.file.Path])
     java.nio.file.Files.copy(files(0), in.resolve(files(0).getFileName))

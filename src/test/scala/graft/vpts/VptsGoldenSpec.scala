@@ -51,15 +51,13 @@ class VptsGoldenSpec extends AnyFunSuite {
   }
 
   test("PVOL file is rejected by the VP gate") {
-    val bytes = Files.readAllBytes(
-      Paths.get("/root/reference/tests/data/odimh5/bewid_pvol_20170214T0000Z_0x1.h5"))
+    val bytes = VpLakeFixture.pvolBytes("bewid", "20170214", "000000")
     val r = graft.odim.OdimReader(bytes, "bewid_pvol.h5")
     assertThrows[graft.odim.InvalidSourceOdim](graft.odim.OdimReader.checkVpOdim(r))
   }
 
   test("non-ODIM hdf5 is rejected") {
-    val bytes = Files.readAllBytes(
-      Paths.get("/root/reference/tests/data/vp_no_odim_h5/dummy.h5"))
+    val bytes = VpLakeFixture.nonOdimBytes
     val r = graft.odim.OdimReader(bytes, "dummy.h5")
     assertThrows[graft.odim.InvalidSourceOdim](graft.odim.OdimReader.checkVpOdim(r))
   }

@@ -28,7 +28,8 @@ class VptsReadbackSpec extends AnyFunSuite {
   }
 
   test("per-(radar,datetime) height sets are identical (A6 invariant)") {
-    val df = Vpts.vpts(spark, Seq("/root/reference/tests/data/vp"))
+    val vpDir = VpLakeFixture.fullLake(VpLakeFixture.ReferenceVpLayout).toString
+    val df = Vpts.vpts(spark, Seq(vpDir))
     val sets = df.groupBy(col("radar"), col("datetime"))
       .agg(sort_array(collect_set(col("height").cast("int"))).as("hs"))
       .select(col("hs").cast("string")).distinct().count()
