@@ -1,23 +1,17 @@
 package graft
 
-import graft.plans.{LshSigExpr, MinhashSigExpr}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extension point: `--conf spark.sql.extensions=graft.GraftExtensions`
-  * registers the custom expressions as SQL functions in every new session.
+  * installs the SQL surface of [[graft.functions.GraftFunctions.registerAll]]
+  * (the same function list and the as-of join strategy) in every new session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig8"),
-      new ExpressionInfo(classOf[MinhashSigExpr].getName, "minhash_sig8"),
-      exprs => MinhashSigExpr(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("lsh_sig"),
-      new ExpressionInfo(classOf[LshSigExpr].getName, "lsh_sig"),
-      exprs => LshSigExpr(exprs.head)))
+    for ((name, impl, build) <- graft.functions.GraftFunctions.sqlFunctions)
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(impl.getName, name), build))
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.udaf
+import graft.plans._
+import org.apache.spark.sql.{Encoder, Encoders, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.expressions.Aggregator
 
 /** One-call SQL surface: registers every custom expression and sketch
   * aggregator as a session temp function, so a pure-`spark.sql` user (BI
@@ -19,48 +22,47 @@ import org.apache.spark.sql.functions.udaf
   */
 object GraftFunctions {
 
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  /** Every SQL function of the library as (name, implementing class,
+    * builder). [[registerAll]] and [[graft.GraftExtensions]] both install
+    * exactly this list, so the two ways in expose the same names.
+    */
+  private[graft] val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     // native expressions
-    graft.plans.MinhashSigExpr.register(spark)
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => graft.plans.SimhashExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_set",
-      exprs => graft.plans.ShingleSetExpr(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hash_set",
-      exprs => graft.plans.ShingleSetExpr(exprs.head, hashed = true), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_scaled",
-      exprs => graft.plans.CosineExpr(exprs(0), exprs(1)), "scala_udf")
+    ("minhash_sig8", classOf[MinhashSigExpr], exprs => MinhashSigExpr(exprs.head)),
+    ("lsh_sig", classOf[LshSigExpr], exprs => LshSigExpr(exprs.head)),
+    ("simhash64", classOf[SimhashExpr], exprs => SimhashExpr(exprs.head)),
+    ("shingle_set", classOf[ShingleSetExpr], exprs => ShingleSetExpr(exprs.head)),
+    ("shingle_hash_set", classOf[ShingleSetExpr],
+      exprs => ShingleSetExpr(exprs.head, hashed = true)),
+    ("cosine_scaled", classOf[CosineExpr], exprs => CosineExpr(exprs(0), exprs(1))),
     // term_stats(text, 'term1', 'term2', ...) -> [dl, tf1, tf2, ...];
     // the term arguments must be string literals (folded at plan time)
-    reg.createOrReplaceTempFunction("term_stats",
-      exprs => graft.plans.TermStatsExpr(exprs.head,
-        exprs.tail.map(e => e.eval().toString)), "scala_udf")
-    reg.createOrReplaceTempFunction("token_counts",
-      exprs => graft.plans.TokenCountsExpr(exprs.head), "scala_udf")
-
-    // sketch aggregators (fixed, documented parameterizations — SQL temp
+    ("term_stats", classOf[TermStatsExpr],
+      exprs => TermStatsExpr(exprs.head, exprs.tail.map(e => e.eval().toString))),
+    ("token_counts", classOf[TokenCountsExpr], exprs => TokenCountsExpr(exprs.head)),
+    // sketch aggregators (fixed, documented parameterizations — SQL
     // functions can't take constructor args; use the Column API to tune)
-    spark.udf.register("tdigest_quartiles",
-      udaf(new graft.plans.TDigestAggregator(200.0, Seq(0.25, 0.5, 0.75)),
-        org.apache.spark.sql.Encoders.scalaDouble))
-    spark.udf.register("kmv_distinct",
-      udaf(new graft.plans.KmvDistinctAggregator(4096),
-        org.apache.spark.sql.Encoders.STRING))
-    spark.udf.register("kmv_set",
-      udaf(new graft.plans.KmvSetAggregator(4096),
-        org.apache.spark.sql.Encoders.STRING))
-    spark.udf.register("topk3_by",
-      udaf(new graft.plans.TopKAggregator(3),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, Long)]()))
-    spark.udf.register("topk_words",
-      udaf(new graft.plans.TopKWordsAggregator(k = 5, capacity = 4096),
-        org.apache.spark.sql.Encoders.STRING))
-    spark.udf.register("cms_total",
-      udaf(new graft.plans.CmsFreqAggregator(4, 1024, Seq.empty),
-        org.apache.spark.sql.Encoders.STRING))
-    spark.udf.register("heavy_keys",
-      udaf(new graft.plans.HeavyKeysAggregator(256),
-        org.apache.spark.sql.Encoders.STRING))
+    aggregate("tdigest_quartiles",
+      new TDigestAggregator(200.0, Seq(0.25, 0.5, 0.75)), Encoders.scalaDouble),
+    aggregate("kmv_distinct", new KmvDistinctAggregator(4096), Encoders.STRING),
+    aggregate("kmv_set", new KmvSetAggregator(4096), Encoders.STRING),
+    aggregate("topk3_by", new TopKAggregator(3), ExpressionEncoder[(Long, Long)]()),
+    aggregate("topk_words", new TopKWordsAggregator(k = 5, capacity = 4096),
+      Encoders.STRING),
+    aggregate("cms_total", new CmsFreqAggregator(4, 1024, Seq.empty), Encoders.STRING),
+    aggregate("heavy_keys", new HeavyKeysAggregator(256), Encoders.STRING))
+
+  private def aggregate[IN, BUF, OUT](name: String, agg: Aggregator[IN, BUF, OUT],
+      in: Encoder[IN]): (String, Class[_], Seq[Expression] => Expression) =
+    (name, agg.getClass, GraftSqlBridge.aggregatorBuilder(agg, in))
+
+  /** Installs [[sqlFunctions]] as session temp functions and the as-of
+    * join strategy; calling it again changes nothing.
+    */
+  def registerAll(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    for ((name, _, build) <- sqlFunctions)
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    AsOfJoin.ensureRegistered(spark)
   }
 }

@@ -120,7 +120,7 @@ object Similarity {
     */
   def qAnnMmrHnsw(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val cand = hnswProbeAuto(s, stagedHnswGraphAuto(s, dir), e, 0L, 20)
+    val cand = hnswProbe(s, stagedHnswGraphAuto(s, dir), e, 0L, 20)
       .select(col("vec_id"))
     mmrFromCandidates(e, 0L, cand, 5)
   }
@@ -129,10 +129,6 @@ object Similarity {
   // interpolates — a plain val would capture 0s (the r12 object-init
   // gotcha; NOTES gotcha log)
   lazy val qAnnMmrHnswSql: String = {
-    val stCte =
-      s"""nn AS (SELECT count(*) AS n FROM e),
-         |st AS (SELECT min(s) AS s FROM range(2, 4097) t(s), nn
-         |       WHERE s*s*s*$HnswTopTarget >= nn.n)""".stripMargin
     def step(i: Int): String = {
       val prev = s"msel${i - 1}"
       s"""mp$i AS (
@@ -146,11 +142,7 @@ object Similarity {
          |msel$i AS (SELECT rank, vec_id, rel FROM msel${i - 1}
          |          UNION ALL SELECT rank, vec_id, rel FROM mpick$i)""".stripMargin
     }
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |$stCte,
-       |${ndReplaySqlExpr("l2", "(SELECT s*s FROM st)", hnswLayerR(2), HnswBuildRounds)},
-       |${ndReplaySqlExpr("l1", "(SELECT s FROM st)", hnswLayerR(1), HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    s"""$hnswAutoPrefixSql,
        |${hnswDescentSql(0L, "", levels = 3, topModExpr = "(SELECT s*s*s FROM st)")},
        |mcand AS MATERIALIZED (SELECT vec_id FROM w3 ORDER BY nd DESC, vec_id LIMIT 20),
        |mq AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
@@ -1805,31 +1797,59 @@ object Similarity {
 
   private def hnswLayerR(l: Int): Int = math.max(GraphR >> l, 2)
 
+  /** A persisted HNSW artifact as the descent sees it: the frame each
+    * query's top-1 entry is chosen from, the upper layer graphs descended
+    * at the mid fan-out (top layer first) and the base layer, each as
+    * (layer dir, edges per node).
+    */
+  private final case class HnswLayers(entry: DataFrame,
+      upper: Seq[(String, Int)], base: (String, Int))
+
+  /** The one place an artifact's layers are described. The auto artifact
+    * ([[writeHnswAutoArtifact]]) is the one with a `meta` table: its entry
+    * frame is the persisted entry table and it has the [[HnswLevelsMax]]
+    * levels its meta records (taken from the constant the writer records,
+    * so describing it costs no Spark job). The fixed artifact
+    * ([[stagedHnswGraph]]) is entered through the `vec_id % stride^levels
+    * == 0` members of `e` and descends layers `levels - 1` .. 1.
+    */
+  private def hnswLayers(s: SparkSession, graphDir: String, e: DataFrame,
+      levels: Int): HnswLayers = {
+    val meta = new org.apache.hadoop.fs.Path(s"$graphDir/meta")
+    val auto = meta.getFileSystem(s.sparkContext.hadoopConfiguration).exists(meta)
+    require(auto || (levels >= 1 && levels <= HnswLevelsMax),
+      s"hnswProbe supports 1..$HnswLevelsMax graph levels, got $levels")
+    val (entry, lv) =
+      if (auto) (s.read.parquet(s"$graphDir/entry"), HnswLevelsMax)
+      else (e.filter(col("vec_id") % math.pow(HnswStride, levels).toLong === 0), levels)
+    HnswLayers(entry,
+      ((lv - 1) to 1 by -1).map(l => (s"$graphDir/layer$l", hnswLayerR(l))),
+      (s"$graphDir/layer0", GraphR))
+  }
+
   /** [[hnswSearch]] against the PERSISTED layer graphs — the serving path:
     * no graph construction at query time at all. The descent is the same
-    * (top-layer scan → L1 beam → L0 beam, exact scaled-int distances,
-    * vec_id tie-breaks) but every edge expansion is a partition-pruned
-    * parquet read of the frontier's buckets via [[annGraphLookup]], so a
-    * query touches O(beam·R·rounds) of an artifact that was built once —
-    * at 100 TB the probe cost is flat in corpus size while the inline
-    * [[hnswSearch]] form rebuilds quadratic layer graphs per query.
+    * (top-layer scan → upper-layer beams → L0 beam, exact scaled-int
+    * distances, vec_id tie-breaks) but every edge expansion is a
+    * partition-pruned parquet read of the frontier's buckets via
+    * [[annGraphLookup]], so a query touches O(beam·R·rounds) of an
+    * artifact that was built once — at 100 TB the probe cost is flat in
+    * corpus size while the inline [[hnswSearch]] form rebuilds quadratic
+    * layer graphs per query.
+    *
+    * `graphDir` is either artifact ([[hnswLayers]]). On the fixed one,
+    * `levels` picks the depth: the top scan covers n/stride^levels
+    * members. The auto artifact's top stage is its ≤[[HnswTopTarget]]-row
+    * entry table, so no stage's input grows with n.
     */
   def hnswProbe(s: SparkSession, graphDir: String, e: DataFrame,
-      queryId: Long, k: Int, stride: Int = HnswStride,
-      beam: Int = HnswEf, rounds: Int = GraphBeamRounds,
-      levels: Int = 2): DataFrame = {
-    require(levels >= 1 && levels < HnswLevelsMax + 1,
-      s"hnswProbe supports 1..$HnswLevelsMax graph levels, got $levels")
+      queryId: Long, k: Int, levels: Int = 2): DataFrame = {
+    val layers = hnswLayers(s, graphDir, e, levels)
     val qvec = e.filter(col("vec_id") === queryId)
       .select(col("embedding")).head().getSeq[Float](0).toArray
-    // top: outright best-1 among the stride^levels members — with more
-    // levels this scan shrinks geometrically (the n/stride² term the
-    // 2-level form carries becomes n/stride³, …)
-    val topMod = math.pow(stride, levels).toLong
     // seeds carry (id, nd): every hand-off below passes the exact
     // distances it already computed, so no layer re-scores its seeds
-    var seeds = e.filter(col("vec_id") % topMod === 0 &&
-        col("vec_id") =!= queryId)
+    var seeds = layers.entry.filter(col("vec_id") =!= queryId)
       .select(col("vec_id"),
         graft.plans.NegSqDistExpr.negSqDist(col("embedding"), typedLit(qvec)).as("nd"))
       .orderBy(col("nd").desc, col("vec_id")).limit(1)
@@ -1837,22 +1857,19 @@ object Similarity {
     // a top layer holding only the query node (tiny/irregular-id corpus)
     // would silently return an empty result — fail by name instead
     require(seeds.nonEmpty,
-      s"hnswProbe: top layer (vec_id % $topMod == 0) holds no non-query " +
-        "node — corpus too small for this stride/levels, probe inline with " +
-        "hnswSearch or lower `levels`")
+      s"hnswProbe: the top layer of $graphDir holds no non-query node — " +
+        "corpus too small for these levels, probe inline with hnswSearch " +
+        "or lower `levels`")
     // descend the staged upper-layer graphs, narrow beam each
-    for (l <- (levels - 1) to 1 by -1) {
-      val members = e.filter(col("vec_id") % math.pow(stride, l).toLong === 0)
-      seeds = graphBeamSearch(s.emptyDataFrame, members, queryId,
+    for ((dir, r) <- layers.upper)
+      seeds = graphBeamSearch(s.emptyDataFrame, e, queryId,
           k = HnswMidFanout, beam = HnswMidFanout, rounds = 1,
-          queryVec = Some(qvec),
-          lookup = Some(annGraphLookup(s, s"$graphDir/layer$l", hnswLayerR(l))),
+          queryVec = Some(qvec), lookup = Some(annGraphLookup(s, dir, r)),
           entryDists = Some(seeds))
         .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-    }
-    graphBeamSearch(s.emptyDataFrame, e, queryId, k, beam = beam,
-      rounds = rounds, queryVec = Some(qvec),
-      lookup = Some(annGraphLookup(s, s"$graphDir/layer0", GraphR)),
+    graphBeamSearch(s.emptyDataFrame, e, queryId, k, beam = HnswEf,
+      rounds = GraphBeamRounds, queryVec = Some(qvec),
+      lookup = Some(annGraphLookup(s, layers.base._1, layers.base._2)),
       entryDists = Some(seeds))
   }
 
@@ -1871,10 +1888,7 @@ object Similarity {
       queryId = 0L, k = 5, levels = 3)
 
   val qAnnHnswProbe3Sql: String =
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |${ndReplaySql("l2", HnswStride * HnswStride, hnswLayerR(2), HnswBuildRounds)},
-       |${ndReplaySql("l1", HnswStride, HnswR1, HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    s"""${hnswFixedPrefixSql(levels = 3)},
        |${hnswDescentSql(0L, "", levels = 3)}
        |SELECT rank, vec_id, nd FROM res ORDER BY rank""".stripMargin
 
@@ -1927,7 +1941,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"))
       .withColumn("seg", lit("base"))
       .coalesce(1).write.partitionBy("seg").parquet(s"$outDir/entry")
-    Seq((st.toLong, 3L, n)).toDF("stride", "levels", "n")
+    Seq((st.toLong, HnswLevelsMax.toLong, n)).toDF("stride", "levels", "n")
       .coalesce(1).write.parquet(s"$outDir/meta")
     st
   }
@@ -1973,66 +1987,14 @@ object Similarity {
     }
   }
 
-  /** [[hnswProbe]] against the auto-strided artifact — the fully
-    * corpus-FLAT serving path: the top stage reads the persisted
-    * ≤[[HnswTopTarget]]-row entry table (never the corpus), each edge
-    * expansion is a partition-pruned bucket read of the frontier, and
-    * each distance pass is a vec_id-pruned corpus lookup of O(beam·R)
-    * rows. No stage's input grows with n — the fixed-stride probe's one
-    * corpus-proportional term (its n/stride^levels top scan) is gone.
-    * Descent shape is identical to [[hnswProbe]] at `levels = 3`; only
-    * the seed source differs (and holds the same rows by construction).
-    */
-  def hnswProbeAuto(s: SparkSession, graphDir: String, e: DataFrame,
-      queryId: Long, k: Int, beam: Int = HnswEf,
-      rounds: Int = GraphBeamRounds): DataFrame = {
-    val qvec = e.filter(col("vec_id") === queryId)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    // seeds carry (id, nd) — each layer hand-off passes the exact
-    // distances the previous stage already computed, so no stage pays a
-    // seed re-score job (3 fewer Spark jobs per probe; values identical)
-    var seeds = s.read.parquet(s"$graphDir/entry")
-      .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"),
-        graft.plans.NegSqDistExpr.negSqDist(col("embedding"), typedLit(qvec)).as("nd"))
-      .orderBy(col("nd").desc, col("vec_id")).limit(1)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    require(seeds.nonEmpty,
-      "hnswProbeAuto: entry table holds no non-query node")
-    for (l <- 2 to 1 by -1)
-      seeds = graphBeamSearch(s.emptyDataFrame, e, queryId,
-          k = HnswMidFanout, beam = HnswMidFanout, rounds = 1,
-          queryVec = Some(qvec),
-          lookup = Some(annGraphLookup(s, s"$graphDir/layer$l", hnswLayerR(l))),
-          entryDists = Some(seeds))
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-    graphBeamSearch(s.emptyDataFrame, e, queryId, k, beam = beam,
-      rounds = rounds, queryVec = Some(qvec),
-      lookup = Some(annGraphLookup(s, s"$graphDir/layer0", GraphR)),
-      entryDists = Some(seeds))
-  }
-
   def qAnnHnswAuto(s: SparkSession, dir: String): DataFrame =
-    hnswProbeAuto(s, stagedHnswGraphAuto(s, dir), Tables.embeddings(s, dir),
+    hnswProbe(s, stagedHnswGraphAuto(s, dir), Tables.embeddings(s, dir),
       queryId = 0L, k = 5)
 
-  val qAnnHnswAutoSql: String = {
-    // the oracle recomputes the stride from count(*) with the same exact
-    // integer search, then replays all three layer builds with the
-    // stride as a scalar subquery — one static string, correct at every
-    // scale (s = 2 at sf0.01, 4 at sf0.1, 7 at sf1)
-    val stCte =
-      s"""nn AS (SELECT count(*) AS n FROM e),
-         |st AS (SELECT min(s) AS s FROM range(2, 4097) t(s), nn
-         |       WHERE s*s*s*$HnswTopTarget >= nn.n)""".stripMargin
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |$stCte,
-       |${ndReplaySqlExpr("l2", "(SELECT s*s FROM st)", hnswLayerR(2), HnswBuildRounds)},
-       |${ndReplaySqlExpr("l1", "(SELECT s FROM st)", hnswLayerR(1), HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+  val qAnnHnswAutoSql: String =
+    s"""$hnswAutoPrefixSql,
        |${hnswDescentSql(0L, "", levels = 3, topModExpr = "(SELECT s*s*s FROM st)")}
        |SELECT rank, vec_id, nd FROM res ORDER BY rank""".stripMargin
-  }
 
   /** Batched [[hnswProbe]] — the serving-THROUGHPUT form: |Q| queries
     * descend together, paying ONE distributed job per layer round for the
@@ -2047,46 +2009,15 @@ object Similarity {
     * (q, id, nd) triples into the frontiers, never touching a vector.
     * |Q| is capped like [[knnJoinBatched]] — the frontier bookkeeping is
     * |Q|·beam·R ids per round, driver-bounded by the same argument.
-    * Entry selection reuses [[knnJoinBatched]] over the top layer — one
-    * aggregation job for all queries. Output is bit-identical to
-    * per-query [[hnswProbe]] (SimilarityRecallSpec pins it), as rows
+    * Entry selection is one [[knnJoinBatched]] top-1 over the artifact's
+    * entry frame ([[hnswLayers]]: the fixed form's stride² members, or the
+    * auto artifact's persisted entry table) — one aggregation job for all
+    * queries. Output is bit-identical to per-query [[hnswProbe]] on either
+    * artifact (SimilarityRecallSpec pins both), as rows
     * `(q_id, rank, vec_id, nd)`.
     */
   def hnswProbeBatched(s: SparkSession, graphDir: String, e: DataFrame,
-      queryIds: Seq[Long], k: Int, stride: Int = HnswStride,
-      beam: Int = HnswEf, rounds: Int = GraphBeamRounds): DataFrame =
-    hnswProbeBatchedCore(s, e, queryIds, k, beam, rounds,
-      entrySource = e.filter(col("vec_id") % (stride * stride) === 0),
-      upper = Seq((s"$graphDir/layer1", HnswR1)),
-      base = (s"$graphDir/layer0", GraphR))
-
-  /** [[hnswProbeBatched]] against the AUTO-strided artifact — batched
-    * serving over the corpus-flat hierarchy: entry selection is one
-    * aggregation over the persisted ≤[[HnswTopTarget]]-row entry table
-    * for the WHOLE batch (never a corpus scan), then the shared
-    * layer-round machinery descends the staged L2/L1/L0 graphs.
-    * Bit-identical to per-query [[hnswProbeAuto]] (spec-pinned).
-    */
-  def hnswProbeBatchedAuto(s: SparkSession, graphDir: String, e: DataFrame,
-      queryIds: Seq[Long], k: Int, beam: Int = HnswEf,
-      rounds: Int = GraphBeamRounds): DataFrame =
-    hnswProbeBatchedCore(s, e, queryIds, k, beam, rounds,
-      entrySource = s.read.parquet(s"$graphDir/entry"),
-      upper = Seq((s"$graphDir/layer2", hnswLayerR(2)),
-        (s"$graphDir/layer1", hnswLayerR(1))),
-      base = (s"$graphDir/layer0", GraphR))
-
-  /** The shared batched descent: entry = one [[knnJoinBatched]] top-1
-    * over `entrySource` (the fixed form's stride² member subset, or the
-    * auto artifact's persisted entry table), then per upper layer one
-    * round at the mid fan-out, then the base layer at full beam. Every
-    * round is one partition-pruned edge fetch plus one distributed
-    * rescore job for the whole batch.
-    */
-  private def hnswProbeBatchedCore(s: SparkSession, e: DataFrame,
-      queryIds: Seq[Long], k: Int, beam: Int, rounds: Int,
-      entrySource: DataFrame, upper: Seq[(String, Int)],
-      base: (String, Int)): DataFrame = {
+      queryIds: Seq[Long], k: Int): DataFrame = {
     import s.implicits._
     require(queryIds.nonEmpty && queryIds.distinct.size == queryIds.size,
       "hnswProbeBatched needs a non-empty, duplicate-free query id set")
@@ -2099,10 +2030,11 @@ object Similarity {
     val qEmb = e.join(qIdsDf, Seq("vec_id"), "left_semi")
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
       .localCheckpoint() // |Q| rows; private to this invocation
-    // ONE batched exact top-1 over the entry source for the whole batch
+    // ONE batched exact top-1 over the entry frame for the whole batch
+    val layers = hnswLayers(s, graphDir, e, levels = 2)
     val qDf = e.join(qIdsDf, Seq("vec_id"), "left_semi")
     val entry: Map[Long, (Long, Long)] = // q -> (entry id, nd)
-      knnJoinBatched(entrySource, qDf, 1).collect().map { r =>
+      knnJoinBatched(layers.entry, qDf, 1).collect().map { r =>
         val p = r.getString(1).split(":")
         r.getLong(0) -> (p(1).toLong, p(0).toLong)
       }.toMap
@@ -2138,12 +2070,12 @@ object Similarity {
       val keep = visited(q).toSeq.sortBy { case (id, d) => (-d, id) }.take(w)
       visited(q).clear(); visited(q) ++= keep
     }
-    for ((dir, r) <- upper) {
+    for ((dir, r) <- layers.upper) {
       layerRounds(dir, r, HnswMidFanout, 1)
       // keep only each query's mid fan-out as seeds for the next level
       trim(HnswMidFanout)
     }
-    layerRounds(base._1, base._2, beam, rounds)
+    layerRounds(layers.base._1, layers.base._2, HnswEf, GraphBeamRounds)
     // the result below is built from driver-side triples — qEmb's
     // checkpoint blocks are dead; a long-lived serving session issuing
     // many batches must not accumulate |Q|-row blocks per call
@@ -2152,97 +2084,6 @@ object Similarity {
       visited(q).toSeq.sortBy { case (id, d) => (-d, id) }.take(k)
         .zipWithIndex.map { case ((id, d), i) => (q, i + 1L, id, d) }
     }.toDF("q_id", "rank", "vec_id", "nd")
-      .orderBy(col("q_id"), col("rank"))
-  }
-
-  /** [[hnswProbeBatchedAuto]] with DATAFRAME frontiers — the unbounded-|Q|
-    * serving form: the Seq-form keeps per-query beam maps on the driver
-    * (bounded by its 65536 cap, ~|Q|·beam·R tuples per round at the cap),
-    * while here `queries` is a frame and EVERY round structure —
-    * frontiers, visited sets, edge expansions, rescores — is a
-    * DataFrame; the only values that ever reach the driver are each
-    * round's ≤[[HnswBuckets]] distinct partition keys. Entry selection
-    * broadcasts the auto artifact's ≤[[HnswTopTarget]]-row entry table
-    * against the query frame (corpus-flat AND |Q|-flat — no aggregation
-    * cap), so a 10⁸-query nightly rerank batch runs as a handful of
-    * shuffles per round. Per-round checkpoints cut the iterative
-    * lineage exactly as [[graft.operators.Dedup.componentLabels]];
-    * superseded rounds release their blocks. Output and descent shape
-    * are row-identical to [[hnswProbeBatchedAuto]] (parity-spec'd);
-    * queries absent from the corpus drop (no vector to descend with).
-    */
-  def hnswProbeBatchedDfAuto(s: SparkSession, graphDir: String, e: DataFrame,
-      queries: DataFrame, k: Int, beam: Int = HnswEf,
-      rounds: Int = GraphBeamRounds): DataFrame = {
-    import s.implicits._
-    val byQ = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("nd").desc, col("vec_id"))
-    val qEmb = e.join(queries.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      .localCheckpoint()
-    val entry = broadcast(s.read.parquet(s"$graphDir/entry")
-      .select(col("vec_id").as("e_id"), col("embedding").as("ee")))
-    var vis = qEmb.crossJoin(entry)
-      .filter(col("e_id") =!= col("q_id"))
-      .select(col("q_id"),
-        col("e_id").as("vec_id"),
-        graft.plans.NegSqDistExpr.negSqDist(col("ee"), col("qe")).as("nd"))
-      .withColumn("rk", row_number().over(byQ))
-      .filter(col("rk") <= 1).drop("rk")
-      .localCheckpoint()
-    def trim(w: Int): Unit = {
-      val t = vis.withColumn("rk", row_number().over(byQ))
-        .filter(col("rk") <= w).drop("rk").localCheckpoint()
-      Staging.releaseLocalCheckpoint(vis)
-      vis = t
-    }
-    def layerRounds(layerDir: String, r: Int, w: Int, n: Int): Unit =
-      for (_ <- 1 to n) {
-        val frontier = vis.withColumn("rk", row_number().over(byQ))
-          .filter(col("rk") <= w && col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id"))
-          .localCheckpoint()
-        // the probe's ONLY driver values: ≤ HnswBuckets partition keys
-        val buckets = frontier
-          .select(pmod(col("vec_id"), lit(HnswBuckets.toLong)).as("b"))
-          .distinct().as[Long].collect()
-        val perU = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("u")).orderBy(col("nd").desc, col("v"))
-        val edges = s.read.parquet(layerDir)
-          .filter(col("b").isin(buckets: _*))
-          .join(broadcast(frontier.select(col("vec_id").as("u")).distinct()),
-            Seq("u"), "left_semi")
-          .select(col("u"), col("v"), col("nd"))
-          .withColumn("rk", row_number().over(perU))
-          .filter(col("rk") <= r)
-          .select(col("u"), col("v"))
-        val wanted = frontier.join(edges, frontier("vec_id") === edges("u"))
-          .select(col("q_id"), col("v").as("vec_id")).distinct()
-          .filter(col("vec_id") =!= col("q_id"))
-          .join(vis.select(col("q_id"), col("vec_id")),
-            Seq("q_id", "vec_id"), "left_anti")
-        val scored = e.select(col("vec_id"), col("embedding"))
-          .join(wanted, Seq("vec_id"))
-          .join(broadcast(qEmb), Seq("q_id"))
-          .select(col("q_id"), col("vec_id"),
-            graft.plans.NegSqDistExpr.negSqDist(col("embedding"), col("qe")).as("nd"))
-        val next = vis.unionByName(scored).localCheckpoint()
-        Staging.releaseLocalCheckpoint(vis)
-        Staging.releaseLocalCheckpoint(frontier)
-        vis = next
-      }
-    for (l <- 2 to 1 by -1) {
-      layerRounds(s"$graphDir/layer$l", hnswLayerR(l), HnswMidFanout, 1)
-      trim(HnswMidFanout)
-    }
-    layerRounds(s"$graphDir/layer0", GraphR, beam, rounds)
-    Staging.releaseLocalCheckpoint(qEmb)
-    // the FINAL visited frame feeds the returned plan — only the harness
-    // knows when its consuming action is done
-    graft.CheckpointScope.scoped(vis): Unit
-    vis.withColumn("rank", row_number().over(byQ).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("nd"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -2524,46 +2365,49 @@ object Similarity {
        |  FROM (SELECT * FROM ${p}w3 ORDER BY nd DESC, vec_id LIMIT 5))""".stripMargin
   }
 
+  /** The oracle's replay of a fixed artifact at `levels`: the corpus CTE
+    * `e` and the layer builds `l{levels-1}g` .. `l0g` (layer l over the
+    * `vec_id % stride^l == 0` members).
+    */
+  private def hnswFixedPrefixSql(levels: Int): String =
+    (hnswCorpusSql +: ((levels - 1) to 0 by -1).map(l => ndReplaySql(s"l$l",
+      BigInt(HnswStride).pow(l).toInt, hnswLayerR(l), HnswBuildRounds)))
+      .mkString(",\n")
+
+  /** The oracle's replay of the auto artifact: `e`, the stride CTEs and
+    * the layer builds `l2g` .. `l0g` with the stride as a scalar subquery.
+    */
+  private def hnswAutoPrefixSql: String =
+    (Seq(hnswCorpusSql, autoStrideSql) ++
+      ((HnswLevelsMax - 1) to 1 by -1).map(l => ndReplaySqlExpr(s"l$l",
+        s"(SELECT ${Seq.fill(l)("s").mkString("*")} FROM st)", hnswLayerR(l),
+        HnswBuildRounds)) :+
+      ndReplaySql("l0", 1, GraphR, HnswBuildRounds)).mkString(",\n")
+
+  private def hnswCorpusSql: String =
+    s"WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")})"
+
+  /** The auto artifact's stride recomputed from count(*) with the same
+    * exact integer search as [[autoHnswStride]] — one static string,
+    * correct at every scale (s = 2 at sf0.01, 4 at sf0.1, 7 at sf1).
+    */
+  private def autoStrideSql: String =
+    s"""nn AS (SELECT count(*) AS n FROM e),
+       |st AS (SELECT min(s) AS s FROM range(2, 4097) t(s), nn
+       |       WHERE s*s*s*$HnswTopTarget >= nn.n)""".stripMargin
+
   val qAnnHnswProbeSql: String =
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |${ndReplaySql("l1", HnswStride, HnswR1, HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    s"""${hnswFixedPrefixSql(levels = 2)},
        |${hnswDescentSql(0L, "")}
        |SELECT rank, vec_id, nd FROM res ORDER BY rank""".stripMargin
 
-  // defined ABOVE the SQL vals that interpolate it (object init order)
-  /** [[hnswProbeFiltered]] over the AUTO artifact — emission-admission
-    * filtered search on the corpus-flat hierarchy (same traversal-stays-
-    * unfiltered contract; the probe-family matrix is now complete:
-    * per-query / batched / filtered × fixed-stride / auto-strided).
-    */
-  def hnswProbeAutoFiltered(s: SparkSession, graphDir: String, e: DataFrame,
-      queryId: Long, k: Int, pred: Column): DataFrame = {
-    val visitedAll = hnswProbeAuto(s, graphDir, e, queryId, Int.MaxValue)
-    visitedAll
-      .join(e.filter(pred).select(col("vec_id")), Seq("vec_id"), "left_semi")
-      .orderBy(col("nd").desc, col("vec_id")).limit(k)
-      .select(row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("nd").desc, col("vec_id"))).as("rank"),
-        col("vec_id"), col("nd"))
-      .orderBy(col("rank"))
-  }
-
   def qAnnHnswAutoFiltered(s: SparkSession, dir: String): DataFrame =
-    hnswProbeAutoFiltered(s, stagedHnswGraphAuto(s, dir),
+    hnswProbeFiltered(s, stagedHnswGraphAuto(s, dir),
       Tables.embeddings(s, dir), queryId = 0L, k = 5,
       pred = pmod(col("vec_id"), lit(3)) === 1)
 
   val qAnnHnswAutoFilteredSql: String = {
-    val stCte =
-      s"""nn AS (SELECT count(*) AS n FROM e),
-         |st AS (SELECT min(s) AS s FROM range(2, 4097) t(s), nn
-         |       WHERE s*s*s*$HnswTopTarget >= nn.n)""".stripMargin
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |$stCte,
-       |${ndReplaySqlExpr("l2", "(SELECT s*s FROM st)", hnswLayerR(2), HnswBuildRounds)},
-       |${ndReplaySqlExpr("l1", "(SELECT s FROM st)", hnswLayerR(1), HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    s"""$hnswAutoPrefixSql,
        |${hnswDescentSql(0L, "", levels = 3, topModExpr = "(SELECT s*s*s FROM st)")}
        |SELECT row_number() OVER (ORDER BY nd DESC, vec_id) AS rank, vec_id, nd
        |FROM (SELECT * FROM w3 WHERE vec_id % 3 = 1
@@ -2574,34 +2418,29 @@ object Similarity {
   private val HnswBatchQueryIds = Seq(0L, 1L, 2L)
 
   def qAnnHnswAutoBatch(s: SparkSession, dir: String): DataFrame =
-    hnswProbeBatchedAuto(s, stagedHnswGraphAuto(s, dir),
+    hnswProbeBatched(s, stagedHnswGraphAuto(s, dir),
       Tables.embeddings(s, dir), HnswBatchQueryIds, 5)
 
-  /** The DataFrame-frontier form over the same staged artifact and query
-    * set — same oracle string as the Seq-form batch (the two paths must
-    * be row-identical; the spec pins it at |Q| = 50 too).
+  /** The same batch given as an id frame: the ids are collected (one
+    * past [[MaxBatchQueries]] at most, so an oversized frame still fails
+    * the cap by name) into the one batched descent — same oracle string
+    * as [[qAnnHnswAutoBatch]].
     */
   def qAnnHnswAutoDfBatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    hnswProbeBatchedDfAuto(s, stagedHnswGraphAuto(s, dir),
-      Tables.embeddings(s, dir), HnswBatchQueryIds.toDF("vec_id"), 5)
+    val ids = HnswBatchQueryIds.toDF("vec_id").as[Long]
+      .limit(MaxBatchQueries + 1).collect().toSeq
+    hnswProbeBatched(s, stagedHnswGraphAuto(s, dir),
+      Tables.embeddings(s, dir), ids, 5)
   }
 
   val qAnnHnswAutoBatchSql: String = {
-    val stCte =
-      s"""nn AS (SELECT count(*) AS n FROM e),
-         |st AS (SELECT min(s) AS s FROM range(2, 4097) t(s), nn
-         |       WHERE s*s*s*$HnswTopTarget >= nn.n)""".stripMargin
     val descents = HnswBatchQueryIds.map(q =>
       hnswDescentSql(q, s"q${q}_", levels = 3,
         topModExpr = "(SELECT s*s*s FROM st)"))
     val unions = HnswBatchQueryIds.map(q =>
       s"SELECT CAST($q AS BIGINT) AS q_id, rank, vec_id, nd FROM q${q}_res")
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |$stCte,
-       |${ndReplaySqlExpr("l2", "(SELECT s*s FROM st)", hnswLayerR(2), HnswBuildRounds)},
-       |${ndReplaySqlExpr("l1", "(SELECT s FROM st)", hnswLayerR(1), HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    s"""$hnswAutoPrefixSql,
        |${descents.mkString(",\n")}
        |${unions.mkString("\nUNION ALL\n")}
        |ORDER BY q_id, rank""".stripMargin
@@ -2880,12 +2719,8 @@ object Similarity {
          |          FROM adc d JOIN $graph g ON g.v = d.vec_id
          |                     JOIN $curB b ON g.u = b.vec_id
          |          WHERE g.u <> 0 AND g.v <> 0)""".stripMargin
-    val stCte =
-      s"""nn AS (SELECT count(*) AS n FROM e),
-         |st AS (SELECT min(s) AS s FROM range(2, 4097) t(s), nn
-         |       WHERE s*s*s*$HnswTopTarget >= nn.n)""".stripMargin
     s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |$stCte,
+       |$autoStrideSql,
        |el AS (SELECT e.vec_id, e.v, emb.label
        |       FROM e JOIN embeddings emb ON e.vec_id = emb.vec_id),
        |${ndReplaySqlExpr("l2", "(SELECT s*s FROM st)", hnswLayerR(2), HnswBuildRounds)},
@@ -3044,29 +2879,25 @@ object Similarity {
     * admitted top-k populated at moderate selectivity; for highly
     * selective predicates compose the other direction (filter first,
     * then [[knnJoinBatched]] over the qualifying subset — both shapes
-    * exist in this library).
+    * exist in this library). Either artifact ([[hnswLayers]]).
     */
   def hnswProbeFiltered(s: SparkSession, graphDir: String, e: DataFrame,
-      queryId: Long, k: Int, pred: Column): DataFrame = {
+      queryId: Long, k: Int, pred: Column): DataFrame =
     // the full visited set of the base descent, ranked (k = all)
-    val visitedAll = hnswProbe(s, graphDir, e, queryId, Int.MaxValue)
-    visitedAll
+    hnswProbe(s, graphDir, e, queryId, Int.MaxValue)
       .join(e.filter(pred).select(col("vec_id")), Seq("vec_id"), "left_semi")
       .orderBy(col("nd").desc, col("vec_id")).limit(k)
       .select(row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy(col("nd").desc, col("vec_id"))).as("rank"),
         col("vec_id"), col("nd"))
       .orderBy(col("rank"))
-  }
 
   def qAnnHnswFiltered(s: SparkSession, dir: String): DataFrame =
     hnswProbeFiltered(s, stagedHnswGraph(s, dir), Tables.embeddings(s, dir),
       queryId = 0L, k = 5, pred = pmod(col("vec_id"), lit(3)) === 1)
 
   val qAnnHnswFilteredSql: String =
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |${ndReplaySql("l1", HnswStride, HnswR1, HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    s"""${hnswFixedPrefixSql(levels = 2)},
        |${hnswDescentSql(0L, "")}
        |SELECT row_number() OVER (ORDER BY nd DESC, vec_id) AS rank, vec_id, nd
        |FROM (SELECT * FROM w3 WHERE vec_id % 3 = 1
@@ -3081,9 +2912,7 @@ object Similarity {
     val descents = HnswBatchQueryIds.map(q => hnswDescentSql(q, s"q${q}_"))
     val unions = HnswBatchQueryIds.map(q =>
       s"SELECT CAST($q AS BIGINT) AS q_id, rank, vec_id, nd FROM q${q}_res")
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |${ndReplaySql("l1", HnswStride, HnswR1, HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    s"""${hnswFixedPrefixSql(levels = 2)},
        |${descents.mkString(",\n")}
        |${unions.mkString("\nUNION ALL\n")}
        |ORDER BY q_id, rank""".stripMargin

@@ -121,12 +121,14 @@ final case class AsOfJoinExec(
 
 object AsOfJoin {
 
-  /** Register the planner strategy once per session. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = strategies :+ AsOfJoinStrategy
-  }
+  /** Register the planner strategy once per session: a no-op where the
+    * session already plans with it, whether from an earlier call or from
+    * [[graft.GraftExtensions]].
+    */
+  def ensureRegistered(spark: SparkSession): Unit =
+    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ AsOfJoinStrategy
 
   /** DataFrame API: for every left row, append the right row with equal key
     * and greatest rightTime <= leftTime (nulls when none).

@@ -89,9 +89,4 @@ object MinhashSigExpr {
   /** Column API: 8-slot minhash signature of a text column. */
   def minhashSig8Native(text: Column, k: Int = 3): Column =
     GraftSqlBridge.column(MinhashSigExpr(GraftSqlBridge.expression(text), k))
-
-  /** Expose as a SQL function: SELECT minhash_sig8(text) ... */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig8", exprs => MinhashSigExpr(exprs.head), "scala_udf")
 }

@@ -10,6 +10,15 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The SQL function builder of a typed aggregator, as
+    * `spark.udf.register(name, udaf(agg, in))` builds it.
+    */
+  def aggregatorBuilder[IN, BUF, OUT](agg: expressions.Aggregator[IN, BUF, OUT],
+      in: Encoder[IN]): Seq[Expression] => Expression = {
+    val udaf = expressions.UserDefinedAggregator(agg, in)
+    children => execution.aggregate.ScalaAggregator(udaf, children)
+  }
+
   def plan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.DataFrame].queryExecution.analyzed
 

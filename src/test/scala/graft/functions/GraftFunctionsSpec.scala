@@ -102,4 +102,31 @@ class GraftFunctionsSpec extends AnyFunSuite {
     val hot = graft.functions.ScalePatterns.detectHotKeys(df, "k", minFrac = 0.3)
     assert(hot == Seq("hot,key"), s"got $hot")
   }
+
+  test("GraftExtensions and registerAll install the same SQL surface, once") {
+    import org.apache.spark.sql.SparkSession
+    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
+    val viaExt = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions()).create()
+    // create() makes the new session the active and default one
+    SparkSession.setActiveSession(spark)
+    SparkSession.setDefaultSession(spark)
+    val viaReg = spark.newSession()
+    GraftFunctions.registerAll(viaReg)
+    GraftFunctions.registerAll(viaReg)
+    def names(s: SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    val builtin = names(spark.newSession())
+    val ext = names(viaExt) -- builtin
+    val reg = names(viaReg) -- builtin
+    assert(ext == reg, s"only via the extension: ${ext -- reg}; only via registerAll: ${reg -- ext}")
+    assert(Set("minhash_sig8", "lsh_sig", "simhash64", "term_stats",
+      "tdigest_quartiles", "heavy_keys").subsetOf(ext), s"got $ext")
+    // the as-of join strategy is planned with exactly once on either path,
+    // however often the install runs
+    for (s <- Seq(viaExt, viaReg)) {
+      AsOfJoin.ensureRegistered(s)
+      assert(s.sessionState.planner.strategies.count(_ == AsOfJoinStrategy) == 1)
+    }
+  }
 }

@@ -124,6 +124,31 @@ class LakeSpec extends AnyFunSuite {
       "monthly output differs from golden via mocks3://")
   }
 
+  test("a generated lake rebuilds to the same bytes through file:// and mocks3://") {
+    // the s3a seam without reference goldens: one generated nosta day in
+    // the hdf5/<radar>/yyyy/mm/dd layout, rebuilt once per scheme; the
+    // file:// run is the expected output of the mocks3:// run
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.mocks3.impl", classOf[MockObjectStoreFileSystem].getName)
+    val day = LakeController.DayKey("baltrad", "nosta", "2023", "03", "11")
+    val month = LakeController.MonthKey("baltrad", "nosta", "2023", "03")
+    val files = graft.vpts.VpLakeFixture.nostaDay(5)
+      .map(_.copy(dir = "baltrad/hdf5/nosta/2023/03/11"))
+    def rebuild(scheme: String): (Array[Byte], Array[Byte]) = {
+      val local = graft.vpts.VpLakeFixture.fullLake(files).toString
+      LakeController.rebuildDay(spark, s"$scheme://$local", day)
+      LakeController.rebuildMonth(spark, s"$scheme://$local", month)
+      (Files.readAllBytes(Paths.get(day.dailyCsvPath(local))),
+        Files.readAllBytes(Paths.get(month.monthlyCsvPath(local))))
+    }
+    val (fileDaily, fileMonthly) = rebuild("file")
+    val (s3Daily, s3Monthly) = rebuild("mocks3")
+    // header + 5 profiles x 25 levels
+    assert(new String(fileDaily, "UTF-8").split("\n").length == 1 + 5 * 25)
+    assert(s3Daily.sameElements(fileDaily), "daily CSV differs via mocks3://")
+    assert(s3Monthly.sameElements(fileMonthly), "monthly gzip differs via mocks3://")
+  }
+
   test("validate op reports zero errors on golden output and catches bad cells") {
     // five nosta profiles of one day, like the reference's inventory/vp
     val vpDir = graft.vpts.VpLakeFixture.fullLake(graft.vpts.VpLakeFixture.nostaDay(5))

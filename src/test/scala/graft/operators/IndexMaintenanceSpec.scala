@@ -344,7 +344,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .filter(col("u") >= 480 && col("seg") === "b0").count() == l0b,
       "layer replay duplicated delta rows")
     // the probe serves the maintained artifact, including a new node
-    val out = Similarity.hnswProbeAuto(spark, dir, e, queryId = 1L, k = 5)
+    val out = Similarity.hnswProbe(spark, dir, e, queryId = 1L, k = 5)
       .collect().map(_.getLong(1)).toSeq
     assert(out.size == 5 && out.distinct.size == 5)
   }

@@ -117,26 +117,6 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("exceeds"))
   }
 
-  test("dataframe-frontier batched probe equals the seq form row-for-row at |Q|=50") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the unbounded-|Q| serving form: frontiers/visited/rescores all stay
-    // DataFrames; only each round's ≤16 partition keys reach the driver.
-    // Pinned row-identical to the Seq-form (whose own parity chain runs
-    // back to the per-query descent) over a 50-query batch on the staged
-    // auto artifact.
-    val dir = Similarity.stagedHnswGraphAuto(spark, sfDir)
-    val e = graft.Tables.embeddings(spark, sfDir)
-    val qs = (0L until 50L).toSeq
-    val seqForm = Similarity.hnswProbeBatchedAuto(spark, dir, e, qs, 5)
-      .collect().map(_.toSeq).toSeq
-    val dfForm = Similarity.hnswProbeBatchedDfAuto(spark, dir, e,
-        qs.toDF("vec_id"), 5)
-      .collect().map(_.toSeq).toSeq
-    assert(seqForm.nonEmpty && seqForm == dfForm,
-      "dataframe-frontier probe diverged from the seq-form batch")
-  }
-
   test("auto-strided hnsw: the entry table is bounded at any corpus size") {
     // 500-vector corpus vs the 4×-larger 2000-vector corpus: the stride
     // adapts (2 vs 4) and the persisted entry table — the probe's WHOLE

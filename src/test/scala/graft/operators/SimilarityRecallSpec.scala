@@ -208,17 +208,17 @@ class SimilarityRecallSpec extends AnyFunSuite {
     assert(entries <= Similarity.HnswTopTarget, s"entry table $entries rows")
     val queries = Seq(0L, 50L, 150L, 300L, 450L)
     val recall = recallAt10(planted, queries,
-      (e, q) => Similarity.hnswProbeAuto(spark, dir, e, q, 10))
+      (e, q) => Similarity.hnswProbe(spark, dir, e, q, 10))
     info(f"planted hnsw AUTO probe recall@10: $recall%.2f")
     assert(recall >= 0.9, s"auto probe recall $recall")
     // the batched form over the auto artifact is bit-identical to the
     // per-query descent — same entry table, same frontiers, same
     // exact scaled-int distances
     val single = queries.flatMap { q =>
-      Similarity.hnswProbeAuto(spark, dir, planted, q, 10)
+      Similarity.hnswProbe(spark, dir, planted, q, 10)
         .collect().map(r => (q, r.getLong(0), r.getLong(1), r.getLong(2)))
     }
-    val batched = Similarity.hnswProbeBatchedAuto(spark, dir, planted, queries, 10)
+    val batched = Similarity.hnswProbeBatched(spark, dir, planted, queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(batched == single,
       s"auto batched vs per-query divergence: ${batched.diff(single).take(3)}")

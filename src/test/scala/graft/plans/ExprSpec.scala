@@ -34,7 +34,7 @@ class ExprSpec extends AnyFunSuite {
 
   test("minhash_sig8 registered as a SQL function matches the Column API") {
     import org.apache.spark.sql.functions._
-    MinhashSigExpr.register(spark)
+    graft.functions.GraftFunctions.registerAll(spark)
     graft.Tables.documents(spark, sfDir).createOrReplaceTempView("docs_t")
     val viaSql = spark.sql(
       "SELECT doc_id, concat_ws('|', minhash_sig8(text)) AS sig FROM docs_t ORDER BY doc_id")

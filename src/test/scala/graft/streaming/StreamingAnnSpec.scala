@@ -150,7 +150,7 @@ class StreamingAnnSpec extends AnyFunSuite {
 
     // the probe still serves over the grown corpus
     val full = spark.read.parquet(corpus).select(col("vec_id"), col("embedding"))
-    val got = Similarity.hnswProbeAuto(spark, streamed, full, 0L, 5)
+    val got = Similarity.hnswProbe(spark, streamed, full, 0L, 5)
     assert(got.count() == 5L, "auto probe failed over the streamed artifact")
   }
 }

@@ -96,10 +96,11 @@ object VpLakeFixture {
     * ~10% nodata and ~10% undetect cells, the 0/1 `gap` flag and 4 integer
     * counts (16 quantities x [[FullLevels]] levels), under the what/where/how
     * attributes of a vol2bird file. The site attributes are a pure function
-    * of `radar`, the cells of (radar, time, variant).
+    * of `radar`, the cells of (radar, time, variant); `how/vcp` is `vcp`
+    * (a Long, or a String such as "NULL").
     */
   private def fullTree(radar: String, date: String, time: String, variant: Int,
-      obj: String): WGroup = {
+      obj: String, vcp: Any): WGroup = {
     val site = new java.util.SplittableRandom(radar.hashCode.toLong)
     val rnd = new java.util.SplittableRandom(
       radar.hashCode.toLong * 31 ^ (date + time).hashCode.toLong * 17 ^ variant)
@@ -128,22 +129,24 @@ object VpLakeFixture {
         "rcs_bird" -> 11.0, "sd_vvp_thresh" -> 2.0, "software" -> "vol2bird",
         "startdate" -> date, "starttime" -> time, "task" -> "vol2bird",
         "task_args" -> "azimMax=360.000000,azimMin=0.000000,layerThickness=200.000000",
-        "vcp" -> 0L, "wavelength" -> 5.3), Nil),
+        "vcp" -> vcp, "wavelength" -> 5.3), Nil),
       "dataset1" -> WGroup(Nil,
         quantities.zipWithIndex.map { case (q, i) => s"data${i + 1}" -> q } :+
           ("what" -> WGroup(Seq("product" -> "VP"), Nil)))))
   }
 
   /** The ODIM HDF5 bytes of one full VP file. */
-  def fullVpBytes(radar: String, date: String, time: String, variant: Int): Array[Byte] =
-    MiniHdf5Writer.write(fullTree(radar, date, time, variant, "VP"))
+  def fullVpBytes(radar: String, date: String, time: String, variant: Int,
+      vcp: Any = 0L): Array[Byte] =
+    MiniHdf5Writer.write(fullTree(radar, date, time, variant, "VP", vcp))
 
   /** A valid ODIM file whose `what/object` is `PVOL`: the VP gate rejects it. */
   def pvolBytes(radar: String, date: String, time: String): Array[Byte] =
-    MiniHdf5Writer.write(fullTree(radar, date, time, 0, "PVOL"))
+    MiniHdf5Writer.write(fullTree(radar, date, time, 0, "PVOL", 0L))
 
   /** One full VP file of a generated lake, at `dir` (relative, may be empty). */
-  final case class VpFile(dir: String, radar: String, date: String, time: String, variant: Int)
+  final case class VpFile(dir: String, radar: String, date: String, time: String,
+      variant: Int, vcp: Any = 0L)
 
   /** The layout of vptstools' `tests/data/vp`: five bejab profiles of one
     * evening under `bejab/yyyy/mm/dd` and one bewid profile.
@@ -165,7 +168,7 @@ object VpLakeFixture {
     files.foreach { v =>
       val f = root.resolve(v.dir).resolve(fileName(v.radar, v.date, v.time, v.variant))
       Files.createDirectories(f.getParent)
-      Files.write(f, fullVpBytes(v.radar, v.date, v.time, v.variant))
+      Files.write(f, fullVpBytes(v.radar, v.date, v.time, v.variant, v.vcp))
     }
     root
   }

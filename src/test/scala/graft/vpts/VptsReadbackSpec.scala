@@ -36,6 +36,18 @@ class VptsReadbackSpec extends AnyFunSuite {
     assert(sets == 1)
   }
 
+  test("vcp 0 and \"NULL\" render as nodata, 12 as \"12\" (FIXTURES.md section 5)") {
+    val vcps = Seq[(String, Any)](("231500", 0L), ("232000", "NULL"), ("232500", 12L))
+    val dir = VpLakeFixture.fullLake(vcps.map { case (t, vcp) =>
+      VpLakeFixture.VpFile("", "nosta", "20230311", t, 1, vcp) }).toString
+    val got = Vpts.vpts(spark, Seq(dir))
+      .select(col("source_file"), col("vcp")).distinct().collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == vcps.map { case (t, _) =>
+      VpLakeFixture.fileName("nosta", "20230311", t, 1) ->
+        (if (t == "232500") "12" else "") }.toMap)
+  }
+
   test("GraftExtensions builders apply cleanly") {
     // smoke: injection list built without error (full wiring needs a fresh
     // session via --conf spark.sql.extensions=graft.GraftExtensions)
