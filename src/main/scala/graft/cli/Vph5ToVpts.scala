@@ -66,18 +66,7 @@ object Vph5ToVpts {
           .groupBy("source", "radar", "yyyy", "mm", "dd").count()
         val keys = LakeController.dayKeys(days)
         println(s"Create ${keys.size} daily VPTS files.")
-        keys.foreach { d =>
-          try LakeController.rebuildDay(spark, bucket, d)
-          catch { case e: Exception =>
-            System.err.println(s"[WARNING] day ${d.h5Folder(bucket)}: ${e.getMessage}")
-          }
-        }
-        LakeController.monthKeys(keys).foreach { m =>
-          try LakeController.rebuildMonth(spark, bucket, m)
-          catch { case e: Exception =>
-            System.err.println(s"[WARNING] month ${m.monthlyCsvPath(bucket)}: ${e.getMessage}")
-          }
-        }
+        LakeController.rebuild(spark, bucket, keys)
       case None =>
         val inventory = opts.getOrElse("--inventory", sys.error("--inventory or --path-folder required"))
         // 0 expands to the full bucket age (Inventory.cutoff)

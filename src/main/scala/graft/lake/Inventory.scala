@@ -146,11 +146,4 @@ object Inventory {
       .map(d => (d.source, d.fileType, d.radar, d.yyyy, d.mm, d.dd, d.modifiedCount))
       .toDF(DayParts :+ "file_count": _*)
   }
-
-  /** A4: strip day -> distinct months (vph5_to_vpts.py:206-212). */
-  def monthsToRebuild(days: DataFrame): DataFrame =
-    days.groupBy(col("source"), col("file_type"), col("radar"),
-        col("yyyy"), col("mm"))
-      .agg(count(lit(1)).as("n_days"))
-      .orderBy(col("source"), col("radar"), col("yyyy"), col("mm"))
 }

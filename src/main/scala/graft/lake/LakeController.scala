@@ -80,20 +80,26 @@ object LakeController {
       Inventory.cutoff(modifiedDaysAgo, now))
     coverageOut.foreach(p => CsvSink.writeCsv(spark, p, Inventory.CoverageColumns,
       Inventory.coverageRows(counts).map { case (dir, n) => Seq(dir, n.toString) }))
-    val days = Inventory.modifiedDays(counts).map(d => DayKey(d.source, d.radar, d.yyyy, d.mm, d.dd))
-    var okDays = 0
-    days.foreach { d =>
-      try { rebuildDay(spark, bucket, d); okDays += 1 }
+    rebuild(spark, bucket,
+      Inventory.modifiedDays(counts).map(d => DayKey(d.source, d.radar, d.yyyy, d.mm, d.dd)))
+  }
+
+  /** Rebuild `days`, then their months; a failed day or month is logged and
+    * skipped (X3). Returns (n_days_rebuilt, n_months_rebuilt).
+    */
+  def rebuild(spark: SparkSession, bucket: String, days: Seq[DayKey]): (Int, Int) = {
+    val okDays = days.count { d =>
+      try { rebuildDay(spark, bucket, d); true }
       catch { case e: Exception =>
         System.err.println(s"[lake] WARNING day ${d.h5Folder(bucket)}: ${e.getMessage}")
+        false
       }
     }
-    val months = monthKeys(days)
-    var okMonths = 0
-    months.foreach { m =>
-      try { rebuildMonth(spark, bucket, m); okMonths += 1 }
+    val okMonths = monthKeys(days).count { m =>
+      try { rebuildMonth(spark, bucket, m); true }
       catch { case e: Exception =>
         System.err.println(s"[lake] WARNING month ${m.monthlyCsvPath(bucket)}: ${e.getMessage}")
+        false
       }
     }
     (okDays, okMonths)

@@ -26,8 +26,7 @@ object VptsLakeWriter {
       // one file per (radar, day): repartition on the partition columns so a
       // day's rows land in one task's write, keeping file counts bounded
       .repartition(col("p_radar"), col("p_year"), col("p_month"), col("p_day"))
-      .sortWithinPartitions(col("radar"), col("datetime"),
-        col("height").cast("int"), col("source_file"))
+      .sortWithinPartitions(graft.vpts.Vpts.canonicalOrder: _*)
       .write
       .mode(SaveMode.Overwrite)
       .partitionBy("p_radar", "p_year", "p_month", "p_day")

@@ -28,9 +28,6 @@ final class OdimReader(val h5: Hdf5File, val fileName: String) {
       s"T${t.substring(0, 2)}:${t.substring(2, 4)}:${t.substring(4, 6)}Z"
   }
 
-  /** Sortable compact key (epoch-second equivalent not needed; ISO sorts). */
-  lazy val dateTimeSortKey: String = dateTimeIso
-
   /** Parse `what.source` "WMO:06410,RAD:BE42,NOD:bejab,..." into a map
     * (odimh5.py:104-116).
     */

@@ -124,9 +124,6 @@ object VptsOps {
     * observable, concurrent first runs are safe, and the fixture listing
     * stream is closed).
     */
-  /** Test/diagnostic access to the staged-corpus builder (ingest scaling). */
-  private[graft] def stagedCorpusForScale(copies: Int): String = stagedCorpus(copies)
-
   private def stagedCorpus(copies: Int): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     Staging.stagedDir(Paths.get(s"/tmp/graft_odim_ingest_corpus_$copies")) { tmp =>

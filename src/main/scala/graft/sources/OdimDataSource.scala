@@ -1,8 +1,8 @@
 package graft.sources
 
-import graft.odim.OdimReader
-import graft.vpts.{BirdProfile, Vpts, VptsCsvVersion}
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import graft.plans.OdimKeyExpr
+import graft.vpts.{Vpts, VptsCsvVersion}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -12,7 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 `odim` format: `spark.read.format("odim").load(dir)` scans a
   * lake of ODIM HDF5 VP files into the VPTS v1 string schema.
@@ -103,16 +103,14 @@ final class OdimScanBuilder(options: CaseInsensitiveStringMap)
   override def build(): Scan = new OdimScan(options, required, limit, pruning)
 }
 
-/** Driver-side file pruning from the ODIM name pattern. Conservative at
-  * minute granularity: comparisons use the name's yyyy-mm-ddThh:mm prefix
-  * against the literal's first 16 chars, and unparseable names are never
-  * pruned.
+/** Driver-side file pruning from the ODIM file name, read by the one name
+  * rule of the inventory and the path algebra ([[OdimKeyExpr.parse]]: the
+  * last ODIM name in the file name). Conservative at minute granularity:
+  * comparisons use the name's yyyy-mm-ddThh:mm against the literal's first
+  * 16 chars, and unparseable names are never pruned.
   */
 object OdimFilePruning {
   import org.apache.spark.sql.sources._
-
-  private val Name =
-    ".*?([a-zA-Z]{5})_([a-z]*)_(\\d{4})(\\d\\d)(\\d\\d)T?(\\d\\d)(\\d\\d).*\\.h5".r
 
   def prunable(f: Filter): Boolean = f match {
     case EqualTo("radar", _) | In("radar", _) => true
@@ -124,10 +122,12 @@ object OdimFilePruning {
 
   private def prefix16(v: Any): String = String.valueOf(v).take(16)
 
-  def keep(fileName: String, filters: Seq[Filter]): Boolean = fileName match {
-    case Name(radar, _, y, m, d, hh, mm) =>
-      val r = radar.toLowerCase
-      val minute = s"$y-$m-${d}T$hh:$mm"
+  def keep(fileName: String, filters: Seq[Filter]): Boolean = {
+    val k = OdimKeyExpr.parse(UTF8String.fromString(fileName))
+    val r = k.getString(2)
+    r.isEmpty || {
+      val minute =
+        s"${k.getString(4)}-${k.getString(5)}-${k.getString(6)}T${k.getString(7)}:${k.getString(8)}"
       filters.forall {
         case EqualTo("radar", v) => r == String.valueOf(v)
         case In("radar", vs) => vs.map(String.valueOf(_)).contains(r)
@@ -138,33 +138,12 @@ object OdimFilePruning {
         case LessThanOrEqual("datetime", v) => minute <= prefix16(v)
         case _ => true
       }
-    case _ => true
+    }
   }
 }
 
 final case class OdimFileRef(path: String, size: Long)
 final case class OdimInputPartition(files: Seq[OdimFileRef]) extends InputPartition
-
-/** Java-serializable Hadoop Configuration (Configuration is Writable but
-  * not Serializable): carries the SESSION's Hadoop conf to executor-side
-  * readers, so custom filesystems and credentials configured on the session
-  * (fs.s3a.*, fs.<scheme>.impl, …) apply inside the scan — a fresh
-  * `new Configuration()` on the executor would silently drop them.
-  */
-final class SerializableHadoopConf(
-    @transient private var conf: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  def value: org.apache.hadoop.conf.Configuration = conf
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    conf.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    conf = new org.apache.hadoop.conf.Configuration(false)
-    conf.readFields(in)
-  }
-}
 
 final class OdimScan(options: CaseInsensitiveStringMap,
     required: StructType = null, limit: Int = -1,
@@ -176,8 +155,11 @@ final class OdimScan(options: CaseInsensitiveStringMap,
   // would, in a multi-session application, pick up whichever session happens
   // to be active then and propagate the wrong fs.* settings to executors.
   @transient private val session = org.apache.spark.sql.SparkSession.active
+  // the SESSION's Hadoop conf reaches the executor-side readers, so custom
+  // filesystems and credentials set on the session (fs.s3a.*,
+  // fs.<scheme>.impl, ...) apply inside the scan
   private val serializableConf =
-    new SerializableHadoopConf(session.sparkContext.hadoopConfiguration)
+    new SerializableConfiguration(session.sparkContext.hadoopConfiguration)
   private val schema0: StructType = Option(required).getOrElse(Vpts.schemaV1)
   override def readSchema(): StructType = schema0
   override def toBatch: Batch = this
@@ -234,7 +216,7 @@ object OdimScan {
 }
 
 final class OdimPartitionReaderFactory(version: String, failFast: Boolean,
-    columns: Array[String], limit: Int, conf: SerializableHadoopConf)
+    columns: Array[String], limit: Int, conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val files = partition.asInstanceOf[OdimInputPartition].files
@@ -244,7 +226,7 @@ final class OdimPartitionReaderFactory(version: String, failFast: Boolean,
 
 final class OdimPartitionReader(files: Seq[OdimFileRef], version: String,
     failFast: Boolean, columns: Array[String], limit: Int,
-    conf: SerializableHadoopConf)
+    conf: SerializableConfiguration)
     extends PartitionReader[InternalRow] {
 
   private val ruleset = VptsCsvVersion(version)
@@ -254,29 +236,26 @@ final class OdimPartitionReader(files: Seq[OdimFileRef], version: String,
   private val fileIt = files.iterator
   private var rowIt: Iterator[scala.collection.immutable.ArraySeq[String]] = Iterator.empty
   private var current: InternalRow = _
-  private def hadoopConf = conf.value
 
   private def decodeNextFile(): Boolean = {
     while (fileIt.hasNext) {
       val f = fileIt.next()
-      val name = f.path.substring(f.path.lastIndexOf('/') + 1)
-      try {
-        val p = new HPath(f.path)
-        val fs = p.getFileSystem(hadoopConf)
-        // single positioned readFully: java.io readAllBytes over the Hadoop
-        // stream degrades to many small reads (7x slowdown on small files)
-        val bytes = new Array[Byte](f.size.toInt)
-        val in = fs.open(p)
-        try in.readFully(0, bytes) finally in.close()
-        val reader = OdimReader.checkVpOdim(OdimReader(bytes, name))
-        rowIt = ruleset.rows(BirdProfile.fromOdim(reader, name)).iterator
-        if (rowIt.hasNext) return true
-      } catch {
-        case e: Exception if !failFast =>
-          System.err.println(s"[odim] skipping $name: ${e.getMessage}")
-      }
+      rowIt = Vpts.fileRows(ruleset, f.path.substring(f.path.lastIndexOf('/') + 1),
+        read(f), failFast).iterator
+      if (rowIt.hasNext) return true
     }
     false
+  }
+
+  /** One positioned readFully: java.io readAllBytes over the Hadoop stream
+    * degrades to many small reads (7x slowdown on small files).
+    */
+  private def read(f: OdimFileRef): Array[Byte] = {
+    val p = new HPath(f.path)
+    val bytes = new Array[Byte](f.size.toInt)
+    val in = p.getFileSystem(conf.value).open(p)
+    try in.readFully(0, bytes) finally in.close()
+    bytes
   }
 
   override def next(): Boolean = {

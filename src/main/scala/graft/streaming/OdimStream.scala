@@ -1,9 +1,11 @@
 package graft.streaming
 
-import graft.odim.OdimReader
-import graft.vpts.{BirdProfile, VptsCsvVersion}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.plans.OdimKeyExpr
+import graft.vpts.Vpts
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming ODIM ingestion: the Structured Streaming twin of `Vpts.vpts`.
   * New h5 files landing in the lake become micro-batches (file stream over
@@ -17,14 +19,11 @@ object OdimStream {
   /** Streaming DataFrame of VPTS v1 rows from a lake prefix. */
   def vptsStream(spark: SparkSession, dir: String,
       version: String = "v1.0", failFast: Boolean = false): DataFrame = {
-    val ruleset = VptsCsvVersion(version)
     import spark.implicits._
-    val binarySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-    val bin = spark.readStream
+    val binarySchema = StructType(Seq(StructField("path", StringType),
+      StructField("modificationTime", TimestampType), StructField("length", LongType),
+      StructField("content", BinaryType)))
+    val files = spark.readStream
       .format("binaryFile")
       .schema(binarySchema)
       .option("pathGlobFilter", "*.h5")
@@ -32,22 +31,7 @@ object OdimStream {
       .load(dir)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
-    val rows: Dataset[Seq[String]] = bin.mapPartitions { it =>
-      it.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        try {
-          val reader = OdimReader.checkVpOdim(OdimReader(bytes, name))
-          ruleset.rows(BirdProfile.fromOdim(reader, name))
-        } catch {
-          case e: Exception if !failFast =>
-            System.err.println(s"[odim-stream] skipping $name: ${e.getMessage}")
-            Seq.empty
-        }
-      }
-    }
-    rows.select(ruleset.columns.zipWithIndex.map { case (c, i) =>
-      element_at(col("value"), i + 1).as(c)
-    }: _*)
+    Vpts.binaryFileRows(files, version, failFast)
   }
 
   /** Streaming lake materialization with WHOLE-DAY rebuild semantics
@@ -81,12 +65,6 @@ object OdimStream {
     q.awaitTermination()
   }
 
-  /** Name pattern of an ODIM file (driver-side twin of
-    * graft.functions.OdimPaths.FileNameRegex).
-    */
-  private val H5Name =
-    ".*?([a-zA-Z]{5})_([a-z]*)_(\\d{4})(\\d\\d)(\\d\\d)T?(\\d\\d)(\\d\\d).*\\.h5".r
-
   private def rebuildAffectedDays(batch: DataFrame, inDir: String,
       lakeDir: String): Unit = {
     val spark = batch.sparkSession
@@ -97,21 +75,14 @@ object OdimStream {
       .distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     // re-list the input prefix and keep every file of an affected day —
-    // including files already processed in earlier batches
-    val fs = new org.apache.hadoop.fs.Path(inDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(inDir), true)
-    val affected = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      p.getName match {
-        case H5Name(radar, _, y, m, d, _, _)
-            if days.contains((radar.toLowerCase, s"$y$m$d")) =>
-          affected += p.toString
-        case _ => ()
-      }
+    // including files already processed in earlier batches; a file's day is
+    // the one its name gives, read by the inventory's rule
+    val files = GraftSqlBridge.listFilesRecursive(spark, Seq(inDir)).map(_._1).filter { p =>
+      val name = p.substring(p.lastIndexOf('/') + 1)
+      val k = OdimKeyExpr.parse(UTF8String.fromString(name))
+      name.endsWith(".h5") &&
+        days.contains((k.getString(2), s"${k.getString(4)}${k.getString(5)}${k.getString(6)}"))
     }
-    val files = affected.result()
     // unsorted scan: the writer sorts each day partition by the canonical key
     if (files.nonEmpty)
       graft.lake.VptsLakeWriter.writePartitioned(

@@ -1,9 +1,10 @@
 package graft.vpts
 
 import graft.odim.OdimReader
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
 
 /** The core VPTS transforms, Spark-first (`vpts.py:180-275`):
   *
@@ -47,33 +48,44 @@ object Vpts {
     */
   def vptsViaBinaryFile(spark: SparkSession, paths: Seq[String], version: String = "v1.0",
       failFast: Boolean = true): DataFrame = {
-    val ruleset = VptsCsvVersion(version)
     import spark.implicits._
-    val bin = spark.read.format("binaryFile")
+    val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.h5")
       .option("recursiveFileLookup", "true")
       .load(paths: _*)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
-    val rows: Dataset[Seq[String]] = bin.mapPartitions { it =>
-      it.flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        try {
-          val reader = OdimReader.checkVpOdim(OdimReader(bytes, name))
-          ruleset.rows(BirdProfile.fromOdim(reader, name))
-        } catch {
-          case e: Exception if !failFast =>
-            System.err.println(s"[vpts] skipping $name: ${e.getMessage}")
-            Seq.empty
-        }
-      }
-    }
-    val df = rows.select(
-      ruleset.columns.zipWithIndex.map { case (c, i) =>
-        element_at(col("value"), i + 1).as(c)
-      }: _*)
-    sortCanonical(df)
+    sortCanonical(binaryFileRows(files, version, failFast))
   }
+
+  /** (path, content) pairs of ODIM files -> VPTS rows in the ruleset's
+    * columns, each file through [[fileRows]]; a batch or a streaming input.
+    */
+  def binaryFileRows(files: Dataset[(String, Array[Byte])], version: String,
+      failFast: Boolean): DataFrame = {
+    val ruleset = VptsCsvVersion(version)
+    import files.sparkSession.implicits._
+    val rows: Dataset[Seq[String]] = files.mapPartitions(_.flatMap { case (path, bytes) =>
+      fileRows(ruleset, path.substring(path.lastIndexOf('/') + 1), bytes, failFast)
+    })
+    rows.select(ruleset.columns.zipWithIndex.map { case (c, i) =>
+      element_at(col("value"), i + 1).as(c)
+    }: _*)
+  }
+
+  /** One ODIM file -> its VPTS rows (the per-file body of reference `vp()`):
+    * the VP gate, the profile decode and the ruleset's render. `bytes` is
+    * read inside the skip: with `failFast` false a file that cannot be read,
+    * is not a VP file or does not decode is logged and yields no rows.
+    */
+  def fileRows(ruleset: VptsCsvVersion, name: String, bytes: => Array[Byte],
+      failFast: Boolean): IndexedSeq[ArraySeq[String]] =
+    try ruleset.rows(BirdProfile.fromOdim(OdimReader.checkVpOdim(OdimReader(bytes, name)), name))
+    catch {
+      case e: Exception if !failFast =>
+        System.err.println(s"[odim] skipping $name: ${e.getMessage}")
+        IndexedSeq.empty
+    }
 
   /** One file -> VP DataFrame (reference `vp()`). */
   def vp(spark: SparkSession, path: String, version: String = "v1.0"): DataFrame =
@@ -85,8 +97,11 @@ object Vpts {
     * range-partitioning sample job, and the scan runs once.
     */
   def sortCanonical(df: DataFrame): DataFrame =
-    df.repartition(1).sortWithinPartitions(col("radar"), col("datetime"),
-      col("height").cast("int"), col("source_file"))
+    df.repartition(1).sortWithinPartitions(canonicalOrder: _*)
+
+  /** The canonical VPTS sort key, in order. */
+  val canonicalOrder: Seq[Column] =
+    Seq(col("radar"), col("datetime"), col("height").cast("int"), col("source_file"))
 
   /** Single ordered CSV file sink (reference `vpts_to_csv`, vpts.py:278-294):
     * the VPTS exchange contract is ONE sorted CSV ([[graft.lake.CsvSink]]).

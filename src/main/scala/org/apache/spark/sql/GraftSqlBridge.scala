@@ -26,10 +26,6 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Recursive file listing through Spark's InMemoryFileIndex (cached,
-    * parallelized, and free of RawLocalFileSystem's per-file permission
-    * exec that makes naive listFiles() pathological on many small files).
-    */
   /** Fails the way a parquet load of a missing path does: `PATH_NOT_FOUND`
     * naming the qualified path.
     */
@@ -42,6 +38,11 @@ object GraftSqlBridge {
         throw errors.QueryCompilationErrors.dataPathNotExistError(qualified.toString)
     }
 
+  /** Recursive file listing through Spark's InMemoryFileIndex (parallelized,
+    * and free of RawLocalFileSystem's per-file permission exec that makes
+    * naive listFiles() pathological on many small files). No file-status
+    * cache: each call sees the files present now.
+    */
   def listFilesRecursive(spark: SparkSession, paths: Seq[String]): Seq[(String, Long)] = {
     val index = new execution.datasources.InMemoryFileIndex(
       spark.asInstanceOf[classic.SparkSession],

@@ -85,6 +85,44 @@ class CliSpec extends AnyFunSuite {
       s"$bucket/baltrad/monthly/nosta/2023/nosta_vpts_202303.csv.gz")))
   }
 
+  test("vph5ToVpts --path-folder and inventory mode rebuild a generated lake to the same bytes") {
+    val h5 = "baltrad/hdf5/nosta/2023/03"
+    val files = VpLakeFixture.nostaDay(3).map(_.copy(dir = s"$h5/11")) ++
+      Seq("000000", "000500").map(t =>
+        VpLakeFixture.VpFile(s"$h5/12", "nosta", "20230312", t, 0))
+    def stdout(args: String*): Seq[String] = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+        Vph5ToVpts.run(spark, args.toArray)
+      }
+      new String(out.toByteArray, "UTF-8").split("\n").toSeq
+    }
+    val globBucket = VpLakeFixture.fullLake(files)
+    assert(stdout("--bucket", globBucket.toString, "--path-folder", s"$globBucket/baltrad/hdf5") ==
+      Seq("Create 2 daily VPTS files.", "Finished VPTS update procedure."))
+
+    val invBucket = VpLakeFixture.fullLake(files)
+    val inventory = invBucket.resolve("inventory.csv")
+    Files.write(inventory, files.map(v =>
+      s"dummy,${v.dir}/${VpLakeFixture.fileName(v.radar, v.date, v.time, v.variant)}," +
+        "123,2023-03-12T00:00:00.000Z").mkString("\n").getBytes("UTF-8"))
+    assert(stdout("--bucket", invBucket.toString, "--inventory", inventory.toString,
+        "--modified-days-ago", "0") ==
+      Seq("Recreate the full set of bucket files. This will take a while!",
+        "Created 2 daily and 1 monthly VPTS files.", "Finished VPTS update procedure."))
+
+    val outputs = Seq("daily/nosta/2023/nosta_vpts_20230311.csv",
+      "daily/nosta/2023/nosta_vpts_20230312.csv", "monthly/nosta/2023/nosta_vpts_202303.csv.gz")
+    outputs.foreach { o =>
+      val glob = Files.readAllBytes(globBucket.resolve(s"baltrad/$o"))
+      assert(glob.sameElements(Files.readAllBytes(invBucket.resolve(s"baltrad/$o"))),
+        s"$o differs between --path-folder and inventory mode")
+    }
+    // header + 3 profiles x 25 levels
+    assert(new String(Files.readAllBytes(globBucket.resolve(s"baltrad/${outputs.head}")),
+      "UTF-8").split("\n").length == 1 + 3 * 25)
+  }
+
   test("CLI failures publish a reference-format alert and re-raise (K7 seam)") {
     class Collecting extends Alerting.AlertSink {
       val got = scala.collection.mutable.ArrayBuffer.empty[(String, String)]

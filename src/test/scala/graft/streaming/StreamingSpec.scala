@@ -81,6 +81,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(s.sameElements(b))
   }
 
+  test("streaming ODIM ingestion skips a non-ODIM file like the batch conversion") {
+    val dir = VpLakeFixture.fullLake(VpLakeFixture.nostaDay(2))
+    java.nio.file.Files.write(dir.resolve("dummy.h5"), VpLakeFixture.nonOdimBytes)
+    val streamed = OdimStream.drainAvailable(spark, dir.toString, "odim_stream_skip_test")
+    val batch = graft.vpts.Vpts.vpts(spark, Seq(dir.toString), failFast = false)
+    assert(streamed.count() == 50)
+    val s = streamed.collect().map(_.toSeq.mkString("|")).sorted
+    val b = batch.collect().map(_.toSeq.mkString("|")).sorted
+    assert(s.sameElements(b))
+  }
+
   test("streaming lake materialization: day partitions + incremental restart") {
     val lake = java.nio.file.Files.createTempDirectory("streamlake").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
