@@ -1,7 +1,7 @@
 package graft.cli
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CLI equivalent of the reference's `transfer_baltrad` sync
@@ -84,17 +84,9 @@ object TransferBaltrad {
 
     def listDst(root: String): Seq[String] = {
       val p = new HPath(root)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else {
-        val it = fs.listFiles(p, true)
-        val out = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile) out += st.getPath.getName
-        }
-        out.result()
-      }
+      if (!p.getFileSystem(conf).exists(p)) Seq.empty
+      else GraftSqlBridge.listFilesRecursive(spark, Seq(root))
+        .map { case (path, _) => new HPath(path).getName }
     }
 
     val srcDf = source.listFileNames().toDF("name")

@@ -36,9 +36,6 @@ object TextFunctions {
   def minhash(sh: Column, seed: Int): Column =
     array_min(transform(sh, x => substring(md5(concat(lit(s"$seed|"), x)), 1, 8)))
 
-  def minhashSql(sh: String, seed: Int): String =
-    s"list_aggregate(list_transform($sh, s -> substring(md5('$seed|' || s), 1, 8)), 'min')"
-
   /** Batched minhash building blocks: one md5 per (seed, shingle), then the
     * 32-hex digest is sliced into four independent 8-char hash slots — 4
     * minhash functions per md5 call. Materialize the md5 array as a column

@@ -16,8 +16,6 @@ object VptsLakeWriter {
 
   /** Write a canonical VPTS DataFrame partitioned by radar/day. */
   def writePartitioned(df: DataFrame, root: String): Unit = {
-    val spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df
       .withColumn("p_radar", col("radar"))
       .withColumn("p_year", substring(col("datetime"), 1, 4))
@@ -29,6 +27,8 @@ object VptsLakeWriter {
       .sortWithinPartitions(graft.vpts.Vpts.canonicalOrder: _*)
       .write
       .mode(SaveMode.Overwrite)
+      // per write, so the session's other overwrites stay static
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("p_radar", "p_year", "p_month", "p_day")
       .parquet(root)
   }

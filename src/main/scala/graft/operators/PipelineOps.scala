@@ -712,9 +712,6 @@ object PipelineOps {
     * doubling rounds, [[Dedup.componentLabels]]-style) — the lazy stages
     * around it still fuse, and ONE oracle checks the whole composition.
     */
-  def trainingPrepFullV2(docs: DataFrame, budget: Long = TokenBudget): DataFrame =
-    trainingPrepFullV2From(trainingPrep(docs), docs, budget)
-
   private def trainingPrepFullV2From(prep: DataFrame, srcOf: DataFrame,
       budget: Long): DataFrame = {
     val train = prep.filter(col("split") === "train")

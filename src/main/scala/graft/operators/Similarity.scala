@@ -1701,7 +1701,6 @@ object Similarity {
 
   // ------------------------------------------------- persisted ann graph --
 
-  private val HnswR1 = math.max(GraphR / 2, 1)
   private val HnswBuckets = 16
   private val HnswBuildRounds = 2
   private val HnswEf = 16
@@ -2370,19 +2369,23 @@ object Similarity {
     * `vec_id % stride^l == 0` members).
     */
   private def hnswFixedPrefixSql(levels: Int): String =
-    (hnswCorpusSql +: ((levels - 1) to 0 by -1).map(l => ndReplaySql(s"l$l",
-      BigInt(HnswStride).pow(l).toInt, hnswLayerR(l), HnswBuildRounds)))
-      .mkString(",\n")
+    (hnswCorpusSql +: hnswFixedReplaySql(levels)).mkString(",\n")
+
+  private def hnswFixedReplaySql(levels: Int): Seq[String] =
+    ((levels - 1) to 0 by -1).map(l => ndReplaySql(s"l$l",
+      BigInt(HnswStride).pow(l).toInt, hnswLayerR(l), HnswBuildRounds))
 
   /** The oracle's replay of the auto artifact: `e`, the stride CTEs and
     * the layer builds `l2g` .. `l0g` with the stride as a scalar subquery.
     */
   private def hnswAutoPrefixSql: String =
-    (Seq(hnswCorpusSql, autoStrideSql) ++
-      ((HnswLevelsMax - 1) to 1 by -1).map(l => ndReplaySqlExpr(s"l$l",
-        s"(SELECT ${Seq.fill(l)("s").mkString("*")} FROM st)", hnswLayerR(l),
-        HnswBuildRounds)) :+
-      ndReplaySql("l0", 1, GraphR, HnswBuildRounds)).mkString(",\n")
+    (hnswCorpusSql +: autoStrideSql +: hnswAutoReplaySql).mkString(",\n")
+
+  private def hnswAutoReplaySql: Seq[String] =
+    ((HnswLevelsMax - 1) to 1 by -1).map(l => ndReplaySqlExpr(s"l$l",
+      s"(SELECT ${Seq.fill(l)("s").mkString("*")} FROM st)", hnswLayerR(l),
+      HnswBuildRounds)) :+
+      ndReplaySql("l0", 1, GraphR, HnswBuildRounds)
 
   private def hnswCorpusSql: String =
     s"WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")})"
@@ -2484,7 +2487,7 @@ object Similarity {
     * replay); it lives behind the spec-pinned boundary the trained
     * encoder already uses (PqTrainSpec pins the training, the recall
     * spec pins the walk over trained books). Cents persist per-subspace
-    * as (j, c_label, cv) — [[pqWalkCore]] branches on that schema.
+    * as (j, c_label, cv) — [[pqGraphProbe]] branches on that schema.
     */
   def writePqCodesTrained(e0: DataFrame, books: DataFrame, outDir: String): Unit = {
     val asg = pqAssign(pqSubRows(e0, "vec_id", "embedding", PqM), books)
@@ -2515,63 +2518,22 @@ object Similarity {
     * ADC lookup Σ_j dq(j, code_j(v)) computed from the candidate's
     * 8-byte sidecar row (partition-pruned read of the SAME buckets as
     * the edge fetch — the walk never touches a full vector), and only
-    * the final `rerank` candidates pay one exact pruned vector read.
-    * The per-query dq table is |codebook|·M ints, one tiny job against
-    * the persisted centroids. Recall is governed by the codebook (the
-    * same coarseness [[pqSearch]] pins); the rerank depth is the knob
-    * that buys it back — at emission the top-`rerank` ADC candidates are
-    * re-ranked by exact distance, so anything the walk VISITED is
-    * recoverable.
+    * the final [[PqWalkRerank]] candidates pay one exact pruned vector
+    * read. The per-query dq table is |codebook|·M ints, one tiny job
+    * against the persisted centroids. Recall is governed by the codebook
+    * (the same coarseness [[pqSearch]] pins); the rerank depth is what
+    * buys it back — at emission the top ADC candidates are re-ranked by
+    * exact distance, so anything the walk VISITED is recoverable.
+    *
+    * `graphDir` is either artifact, described by [[hnswLayers]] as the
+    * exact probes see it: best-1 ADC over the entry members' ids, one
+    * beam round per upper layer at [[HnswMidFanout]] with a trim between
+    * layers, then the base layer at [[HnswEf]] for [[GraphBeamRounds]]
+    * rounds. On the auto artifact the seed read is its ≤[[HnswTopTarget]]
+    * -row entry table, so no stage's input grows with n.
     */
   def pqGraphProbe(s: SparkSession, graphDir: String, codesDir: String,
-      e: DataFrame, queryId: Long, k: Int, stride: Int = HnswStride,
-      beam: Int = HnswEf, rounds: Int = GraphBeamRounds,
-      rerank: Int = PqWalkRerank): DataFrame = {
-    // top seeds: the stride² members (they all live in ONE codes bucket:
-    // vec_id % 16 == 0 => b = 0 — a single-partition read). This scan is
-    // n/stride² rows — corpus-PROPORTIONAL; [[pqGraphProbeAuto]] is the
-    // corpus-flat form (persisted ≤64-row entry table).
-    val s2 = stride * stride
-    val memberIds = s.read.parquet(s"$codesDir/codes")
-      .filter(col("vec_id") % s2 === 0 && col("vec_id") =!= queryId)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    pqWalkCore(s, codesDir, e, queryId, k, rerank, memberIds,
-      Seq((s"$graphDir/layer1", HnswR1, HnswMidFanout, 1)),
-      (s"$graphDir/layer0", GraphR, beam, rounds))
-  }
-
-  /** [[pqGraphProbe]] seeded from the AUTO artifact's persisted entry
-    * table — the corpus-flat compressed walk: the seed read is the
-    * ≤[[HnswTopTarget]]-row entry table (ids only; their distances are
-    * ADC like every other step), the descent walks the auto hierarchy's
-    * L2/L1/L0 graphs, and NO stage's input grows with n — the fixed-form
-    * walk's n/stride² seed scan (its one corpus-proportional term) is
-    * gone, completing for the compressed path what
-    * [[writeHnswAutoArtifact]] did for the exact probes.
-    */
-  def pqGraphProbeAuto(s: SparkSession, autoDir: String, codesDir: String,
-      e: DataFrame, queryId: Long, k: Int, beam: Int = HnswEf,
-      rounds: Int = GraphBeamRounds, rerank: Int = PqWalkRerank): DataFrame = {
-    val entryIds = s.read.parquet(s"$autoDir/entry")
-      .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    pqWalkCore(s, codesDir, e, queryId, k, rerank, entryIds,
-      Seq((s"$autoDir/layer2", hnswLayerR(2), HnswMidFanout, 1),
-        (s"$autoDir/layer1", hnswLayerR(1), HnswMidFanout, 1)),
-      (s"$autoDir/layer0", GraphR, beam, rounds))
-  }
-
-  /** Shared compressed-walk body: best-1 ADC over the seed ids, then per
-    * upper layer `rounds` beam rounds at its width with a trim between
-    * layers, the base layer at full beam, exact rerank at emission. Every
-    * descent distance is an 8-byte ADC lookup from the partition-pruned
-    * codes sidecar; the ONLY full-vector read is the final rerank's
-    * isin-pruned `rerank`-row corpus lookup.
-    */
-  private def pqWalkCore(s: SparkSession, codesDir: String, e: DataFrame,
-      queryId: Long, k: Int, rerank: Int, seedIds: Seq[Long],
-      upper: Seq[(String, Int, Int, Int)],
-      base: (String, Int, Int, Int)): DataFrame = {
+      e: DataFrame, queryId: Long, k: Int): DataFrame = {
     import s.implicits._
     // per-query ADC table from the PERSISTED centroids — (j, c_label) -> distq
     val q = e.filter(col("vec_id") === queryId)
@@ -2609,7 +2571,12 @@ object Similarity {
           for (j <- 0 until PqM) a += dq((j, r.getAs[Number](s"code_$j").longValue))
           (id, -a)
         }.toSeq
-    require(seedIds.nonEmpty, "pqWalkCore: empty seed set")
+    // top seeds: the entry members' ids only — their distances are ADC
+    // like every other step
+    val layers = hnswLayers(s, graphDir, e, levels = 2)
+    val seedIds = layers.entry.filter(col("vec_id") =!= queryId)
+      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
+    require(seedIds.nonEmpty, "pqGraphProbe: empty seed set")
     val visited = scala.collection.mutable.Map[Long, Long]()
     visited ++= adcOf(seedIds).sortBy { case (id, nd) => (-nd, id) }.take(1)
     def walk(layerDir: String, r: Int, w: Int, n: Int): Unit =
@@ -2622,16 +2589,16 @@ object Similarity {
           .filterNot(id => id == queryId || visited.contains(id)).toSeq
         visited ++= adcOf(nbrs)
       }
-    for ((dir, r, w, n) <- upper) {
-      walk(dir, r, w, n)
-      val mid = visited.toSeq.sortBy { case (id, nd) => (-nd, id) }.take(w)
+    for ((dir, r) <- layers.upper) {
+      walk(dir, r, HnswMidFanout, 1)
+      val mid = visited.toSeq.sortBy { case (id, nd) => (-nd, id) }.take(HnswMidFanout)
       visited.clear(); visited ++= mid
     }
-    walk(base._1, base._2, base._3, base._4)
-    // emission: exact rerank of the top-`rerank` ADC candidates — the
-    // ONLY full-vector read of the whole probe
+    walk(layers.base._1, layers.base._2, HnswEf, GraphBeamRounds)
+    // emission: exact rerank of the top-`PqWalkRerank` ADC candidates —
+    // the ONLY full-vector read of the whole probe
     val cand = visited.toSeq.sortBy { case (id, nd) => (-nd, id) }
-      .take(rerank).map(_._1)
+      .take(PqWalkRerank).map(_._1)
     val qvec = e.filter(col("vec_id") === queryId)
       .select(col("embedding")).head().getSeq[Float](0).toArray
     e.filter(col("vec_id").isin(cand: _*))
@@ -2650,68 +2617,31 @@ object Similarity {
     pqGraphProbe(s, stagedHnswGraph(s, dir), stagedPqCodes(s, dir),
       Tables.embeddings(s, dir), queryId = 0L, k = 5)
 
-  val qAnnPqGraphWalkSql: String = {
-    def beam(graph: String, prevV: String, curB: String, curV: String, w: Int): String =
-      s"""$curB AS (SELECT vec_id FROM $prevV ORDER BY nd DESC, vec_id LIMIT $w),
-         |$curV AS (SELECT vec_id, nd FROM $prevV
-         |          UNION SELECT d.vec_id, d.nd
-         |          FROM adc d JOIN $graph g ON g.v = d.vec_id
-         |                     JOIN $curB b ON g.u = b.vec_id
-         |          WHERE g.u <> 0 AND g.v <> 0)""".stripMargin
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |el AS (SELECT e.vec_id, e.v, emb.label
-       |       FROM e JOIN embeddings emb ON e.vec_id = emb.vec_id),
-       |${ndReplaySql("l1", HnswStride, HnswR1, HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
-       |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-       |comp AS (SELECT label, unnest(range(1, $Dim+1)) AS i, unnest(v) AS x FROM el),
-       |cent AS (
-       |  SELECT label AS c_label, list(c ORDER BY i) AS cv
-       |  FROM (SELECT label, i, round(sum(x)/count(*)) AS c FROM comp GROUP BY label, i)
-       |  GROUP BY label),
-       |d AS (
-       |  SELECT e.vec_id, c.c_label, js.j,
-       |    list_sum(list_transform(range(1, $PqSub+1),
-       |      i -> (v[js.j*$PqSub+i]-cv[js.j*$PqSub+i])*(v[js.j*$PqSub+i]-cv[js.j*$PqSub+i]))) AS dist
-       |  FROM e, cent c, (SELECT unnest(range(0, $PqM)) AS j) js
-       |  WHERE e.vec_id <> 0),
-       |dq AS (
-       |  SELECT c.c_label, js.j,
-       |    list_sum(list_transform(range(1, $PqSub+1),
-       |      i -> (qv[js.j*$PqSub+i]-cv[js.j*$PqSub+i])*(qv[js.j*$PqSub+i]-cv[js.j*$PqSub+i]))) AS distq
-       |  FROM cent c, q, (SELECT unnest(range(0, $PqM)) AS j) js),
-       |best AS (
-       |  SELECT vec_id, j, c_label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, c_label) AS rk
-       |    FROM d)
-       |  WHERE rk = 1),
-       |adc AS MATERIALIZED (
-       |  SELECT vec_id, CAST(-sum(distq) AS BIGINT) AS nd
-       |  FROM best JOIN dq USING (c_label, j)
-       |  GROUP BY vec_id),
-       |top AS (SELECT vec_id, nd FROM adc
-       |        WHERE vec_id % ${HnswStride * HnswStride} = 0
-       |        ORDER BY nd DESC, vec_id LIMIT 1),
-       |${beam("l1g", "top", "ub1", "uv1", HnswMidFanout)},
-       |mid1 AS (SELECT vec_id, nd FROM uv1 ORDER BY nd DESC, vec_id LIMIT $HnswMidFanout),
-       |${beam("l0g", "mid1", "c1", "w1", HnswEf)},
-       |${beam("l0g", "w1", "c2", "w2", HnswEf)},
-       |${beam("l0g", "w2", "c3", "w3", HnswEf)},
-       |cand AS (SELECT vec_id FROM w3 ORDER BY nd DESC, vec_id LIMIT $PqWalkRerank),
-       |ex AS (SELECT e.vec_id,
-       |         CAST(-list_sum(list_transform(range(1, $Dim+1),
-       |           i -> (e.v[i] - q.qv[i]) * (e.v[i] - q.qv[i]))) AS BIGINT) AS nd
-       |       FROM e JOIN cand USING (vec_id), q)
-       |SELECT row_number() OVER (ORDER BY nd DESC, vec_id) AS rank, vec_id, nd
-       |FROM (SELECT * FROM ex ORDER BY nd DESC, vec_id LIMIT 5)
-       |ORDER BY rank""".stripMargin
-  }
+  val qAnnPqGraphWalkSql: String =
+    pqWalkSql(Seq(hnswCorpusSql, pqLabelSql) ++ hnswFixedReplaySql(levels = 2),
+      (HnswStride * HnswStride).toString, levels = 2)
 
   def qAnnPqGraphWalkAuto(s: SparkSession, dir: String): DataFrame =
-    pqGraphProbeAuto(s, stagedHnswGraphAuto(s, dir), stagedPqCodes(s, dir),
+    pqGraphProbe(s, stagedHnswGraphAuto(s, dir), stagedPqCodes(s, dir),
       Tables.embeddings(s, dir), queryId = 0L, k = 5)
 
-  val qAnnPqGraphWalkAutoSql: String = {
+  val qAnnPqGraphWalkAutoSql: String =
+    pqWalkSql(Seq(hnswCorpusSql, autoStrideSql, pqLabelSql) ++ hnswAutoReplaySql,
+      "(SELECT s*s*s FROM st)", levels = HnswLevelsMax)
+
+  /** The corpus rows with their labels: the label-centroid codebook the
+    * oracle replays ([[writePqCodes]]). */
+  private def pqLabelSql: String =
+    """el AS (SELECT e.vec_id, e.v, emb.label
+      |       FROM e JOIN embeddings emb ON e.vec_id = emb.vec_id)""".stripMargin
+
+  /** The oracle of [[pqGraphProbe]] for query 0 after the CTEs `prefix`
+    * (the corpus `e`, the labelled `el` and the layer replays
+    * `l{levels-1}g` .. `l0g`): the label-centroid ADC table, best-1 over
+    * the `vec_id % topMod == 0` members, one beam round per upper layer
+    * at the mid fan-out, three base rounds at [[HnswEf]], exact rerank.
+    */
+  private def pqWalkSql(prefix: Seq[String], topMod: String, levels: Int): String = {
     def beam(graph: String, prevV: String, curB: String, curV: String, w: Int): String =
       s"""$curB AS (SELECT vec_id FROM $prevV ORDER BY nd DESC, vec_id LIMIT $w),
          |$curV AS (SELECT vec_id, nd FROM $prevV
@@ -2719,13 +2649,12 @@ object Similarity {
          |          FROM adc d JOIN $graph g ON g.v = d.vec_id
          |                     JOIN $curB b ON g.u = b.vec_id
          |          WHERE g.u <> 0 AND g.v <> 0)""".stripMargin
-    s"""WITH e AS MATERIALIZED (${eCapSql("9223372036854775807")}),
-       |$autoStrideSql,
-       |el AS (SELECT e.vec_id, e.v, emb.label
-       |       FROM e JOIN embeddings emb ON e.vec_id = emb.vec_id),
-       |${ndReplaySqlExpr("l2", "(SELECT s*s FROM st)", hnswLayerR(2), HnswBuildRounds)},
-       |${ndReplaySqlExpr("l1", "(SELECT s FROM st)", hnswLayerR(1), HnswBuildRounds)},
-       |${ndReplaySql("l0", 1, GraphR, HnswBuildRounds)},
+    val upper = ((levels - 1) to 1 by -1).map { l =>
+      val prev = if (l == levels - 1) "top" else s"mid${l + 1}"
+      s"""${beam(s"l${l}g", prev, s"ub$l", s"uv$l", HnswMidFanout)},
+         |mid$l AS (SELECT vec_id, nd FROM uv$l ORDER BY nd DESC, vec_id LIMIT $HnswMidFanout)""".stripMargin
+    }.mkString(",\n")
+    s"""${prefix.mkString(",\n")},
        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
        |comp AS (SELECT label, unnest(range(1, $Dim+1)) AS i, unnest(v) AS x FROM el),
        |cent AS (
@@ -2753,12 +2682,9 @@ object Similarity {
        |  FROM best JOIN dq USING (c_label, j)
        |  GROUP BY vec_id),
        |top AS (SELECT vec_id, nd FROM adc
-       |        WHERE vec_id % (SELECT s*s*s FROM st) = 0
+       |        WHERE vec_id % $topMod = 0
        |        ORDER BY nd DESC, vec_id LIMIT 1),
-       |${beam("l2g", "top", "ub2", "uv2", HnswMidFanout)},
-       |mid2 AS (SELECT vec_id, nd FROM uv2 ORDER BY nd DESC, vec_id LIMIT $HnswMidFanout),
-       |${beam("l1g", "mid2", "ub1", "uv1", HnswMidFanout)},
-       |mid1 AS (SELECT vec_id, nd FROM uv1 ORDER BY nd DESC, vec_id LIMIT $HnswMidFanout),
+       |$upper,
        |${beam("l0g", "mid1", "c1", "w1", HnswEf)},
        |${beam("l0g", "w1", "c2", "w2", HnswEf)},
        |${beam("l0g", "w2", "c3", "w3", HnswEf)},

@@ -86,11 +86,6 @@ object PyFormat {
     sb.toString
   }
 
-  /** str() of a value that numpy `astype(float32)` produced: the f32 is
-    * widened exactly to double and repr'd (`vpts.py:58-63` tolist()).
-    */
-  def pyFloat32(f: Float): String = pyFloat(f.toDouble)
-
   /** numpy-compatible round-half-even to `scale` decimals: np.round's own
     * algorithm (scale by 10^n, rint, divide — numpy documents it as fast but
     * inexact). Decimal-string-based rounding (BigDecimal.valueOf) diverges on

@@ -149,6 +149,26 @@ class LakeSpec extends AnyFunSuite {
     assert(s3Monthly.sameElements(fileMonthly), "monthly gzip differs via mocks3://")
   }
 
+  test("the lake writer overwrites its own days only, and leaves the session's overwrite mode static") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    try {
+      val vpts = Seq(("nosta", "2023-03-11T23:15:00Z", 200, "a.h5"))
+        .toDF("radar", "datetime", "height", "source_file")
+      VptsLakeWriter.writePartitioned(vpts, Files.createTempDirectory("lake").toString)
+      assert(spark.conf.get(key).equalsIgnoreCase("STATIC"))
+      // a plain partitioned overwrite in the same session replaces the table
+      val dir = Files.createTempDirectory("static-overwrite").resolve("t")
+      Seq((1, "a"), (2, "b")).toDF("p", "v")
+        .write.mode("overwrite").partitionBy("p").parquet(dir.toString)
+      Seq((1, "c")).toDF("p", "v")
+        .write.mode("overwrite").partitionBy("p").parquet(dir.toString)
+      assert(!Files.exists(dir.resolve("p=2")), "partition p=2 survived a static overwrite")
+      assert(spark.read.parquet(dir.toString).as[(String, Int)].collect().toSeq == Seq(("c", 1)))
+    } finally spark.conf.set(key, before)
+  }
+
   test("validate op reports zero errors on golden output and catches bad cells") {
     // five nosta profiles of one day, like the reference's inventory/vp
     val vpDir = graft.vpts.VpLakeFixture.fullLake(graft.vpts.VpLakeFixture.nostaDay(5))

@@ -273,7 +273,7 @@ class SimilarityRecallSpec extends AnyFunSuite {
     Similarity.writePqCodes(planted, codesDir)
     val queries = Seq(0L, 50L, 150L, 300L, 450L)
     val recall = recallAt10(planted, queries,
-      (e, q) => Similarity.pqGraphProbeAuto(spark, dir, codesDir, e, q, 10))
+      (e, q) => Similarity.pqGraphProbe(spark, dir, codesDir, e, q, 10))
     info(f"planted auto-seeded pq walk recall@10: $recall%.2f")
     assert(recall >= 0.8, s"auto pq walk recall $recall")
 
@@ -284,7 +284,7 @@ class SimilarityRecallSpec extends AnyFunSuite {
     val trainedDir = java.nio.file.Files.createTempDirectory("pq-walk-trained").toString
     Similarity.writePqCodesTrained(planted, books, trainedDir)
     val trained = recallAt10(planted, queries,
-      (e, q) => Similarity.pqGraphProbeAuto(spark, dir, trainedDir, e, q, 10))
+      (e, q) => Similarity.pqGraphProbe(spark, dir, trainedDir, e, q, 10))
     info(f"planted auto walk over TRAINED books recall@10: $trained%.2f")
     assert(trained >= 0.8, s"trained-book walk recall $trained")
   }
