@@ -40,15 +40,15 @@ object Bench {
 
     // Between-run isolation (optimization guide §1.4/§5): a query's timed
     // runs must not pay for PREVIOUS invocations' garbage. Every
-    // per-invocation localCheckpoint frame is registered in
-    // CheckpointScope by the operator that created it; draining the scope
-    // after each run frees the blocks explicitly — the lifecycle a
-    // long-lived serving session uses, replacing r13's System.gc() crutch
-    // (which only forced the ContextCleaner to notice GC'd frames). The
-    // drain runs BETWEEN runs (never inside a timed region) and leaves
-    // process-lifetime state (Tables readers, staged artifacts, the
-    // pinned funnel-prep memo) untouched, so every timed run still
-    // computes from the parquet inputs exactly as before.
+    // localCheckpoint is made by CheckpointScope.local, which registers it
+    // with the calling thread's scope; this thread builds and runs every
+    // query, so draining after each run frees the blocks of exactly that
+    // run — the lifecycle a long-lived serving session uses, replacing
+    // r13's System.gc() crutch (which only forced the ContextCleaner to
+    // notice GC'd frames). The drain runs BETWEEN runs (never inside a
+    // timed region) and leaves process-lifetime state (Tables readers,
+    // staged artifacts, the pinned funnel-prep memo) untouched, so every
+    // timed run still computes from the parquet inputs exactly as before.
     //
     // A query that throws is named on both output lines and left out of
     // the total, never timed as a fast run; the process then exits nonzero.

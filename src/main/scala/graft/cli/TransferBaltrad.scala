@@ -56,9 +56,8 @@ object TransferBaltrad {
     }
 
   private def run(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    val src = opts.getOrElse("--source", sys.error("--source required"))
-    val dst = opts.getOrElse("--destination", sys.error("--destination required"))
+    val opts = CliOptions.parse(args.toSeq, Seq("--source", "--destination", "--lake-source"),
+      required = Seq("--source", "--destination"))
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("transferBaltrad")
@@ -66,7 +65,8 @@ object TransferBaltrad {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val copied = sync(spark, src, dst, opts.getOrElse("--lake-source", "baltrad"))
+    val copied = sync(spark, opts("--source"), opts("--destination"),
+      opts.getOrElse("--lake-source", "baltrad"))
     println(s"Transferred $copied files.")
     spark.stop()
   }

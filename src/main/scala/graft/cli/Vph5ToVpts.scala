@@ -37,18 +37,16 @@ object Vph5ToVpts {
       try run(spark, opts) finally spark.stop()
     }
 
-  private def parseOpts(args: Array[String]): Map[String, String] = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    opts.getOrElse("--bucket", sys.error("--bucket required"))
-    opts
-  }
+  private def parseOpts(args: Array[String]): Map[String, String] =
+    CliOptions.parse(args.toSeq, Seq("--bucket", "--inventory", "--modified-days-ago",
+      "--coverage", "--path-folder"), required = Seq("--bucket"))
 
   /** CLI body against a caller-owned session (testable e2e). */
   def run(spark: SparkSession, args: Array[String]): Unit =
     run(spark, parseOpts(args))
 
   private def run(spark: SparkSession, opts: Map[String, String]): Unit = {
-    val bucket = opts.getOrElse("--bucket", sys.error("--bucket required"))
+    val bucket = opts("--bucket")
     val modifiedDaysAgo = opts.getOrElse("--modified-days-ago", "2").toInt
 
     opts.get("--path-folder") match {

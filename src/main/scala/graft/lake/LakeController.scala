@@ -52,6 +52,8 @@ object LakeController {
 
   /** Rebuild one radar-month: concat its daily CSVs (sorted, month-filtered
     * file list) into the gzipped monthly file (`vph5_to_vpts.py:214-248`).
+    * The month is matched in the file NAME, as the reference filters keys
+    * (F5): a bucket path holding the digits must not select every day.
     * The file is multi-member gzip, one member per daily file
     * ([[CsvSink.concatCsvFiles]]).
     */
@@ -60,9 +62,9 @@ object LakeController {
     val folder = new HPath(month.dailyFolder(bucket))
     val files =
       if (filesystem.exists(folder))
-        filesystem.listStatus(folder).toSeq.map(_.getPath.toString)
-          .filter(_.contains(s"${month.yyyy}${month.mm}"))
-          .sorted
+        filesystem.listStatus(folder).toSeq.map(_.getPath)
+          .filter(_.getName.contains(s"${month.yyyy}${month.mm}"))
+          .map(_.toString).sorted
       else Seq.empty
     if (files.nonEmpty)
       CsvSink.concatCsvFiles(spark, files, month.monthlyCsvPath(bucket), gzip = true)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{CheckpointScope, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,11 +64,10 @@ object Bpe {
     import s.implicits._
     // chars via substring (split(word, '') keeps a trailing "" under
     // Spark's limit=-1 regex split — an empty symbol would poison pairs)
-    var vocab = wordCounts(docs, textCol)
+    var vocab = CheckpointScope.local(wordCounts(docs, textCol)
       .select(col("cnt"), concat(
         expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
-        array(lit(EndMark))).as("syms"))
-      .localCheckpoint()
+        array(lit(EndMark))).as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rank = 1
     while (rank <= numMerges) {
@@ -87,20 +86,19 @@ object Bpe {
       else {
         val (l, r, c) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
         merges += ((rank, l, r, c))
-        val next = vocab
-          .select(col("cnt"), mergeSyms(col("syms"), l, r).as("syms"))
-          .localCheckpoint()
+        val next = CheckpointScope.local(vocab
+          .select(col("cnt"), mergeSyms(col("syms"), l, r).as("syms")))
         // the eager checkpoint above just materialized FROM the previous
         // round's blocks — free them now (guide §5) instead of waiting for
         // frame GC; numMerges rounds would otherwise hold numMerges copies
         // of the vocab in the storage pool
-        Staging.releaseLocalCheckpoint(vocab)
+        CheckpointScope.release(vocab)
         vocab = next
         rank += 1
       }
     }
     // merges live on the driver; the final vocab's blocks are dead too
-    Staging.releaseLocalCheckpoint(vocab)
+    CheckpointScope.release(vocab)
     merges.toSeq.toDF("rank", "left", "right", "pair_cnt")
       .orderBy(col("rank"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{CheckpointScope, QueryDef, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.EmbeddingFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -356,10 +356,9 @@ object Dedup {
     // the batch is signatured ONCE: the eager checkpoint feeds the bounded
     // prefix collect AND the probe plan (the r12 form recomputed the
     // MinHash signatures across both — the probe's dominant batch-side
-    // cost). The blocks live until the returned lazy frame is GC'd
-    // (ContextCleaner); they hold batch x 4 band rows, never corpus rows.
-    val inRows = graft.CheckpointScope.scoped(
-      bandRowsGeneric(in, idCol, textCol, shingleK).localCheckpoint())
+    // cost). The blocks live until the caller's drain; they hold
+    // batch x 4 band rows, never corpus rows.
+    val inRows = CheckpointScope.local(bandRowsGeneric(in, idCol, textCol, shingleK))
     val probed = inRows
       .select(col("band"), keyPrefix(col("key")).as("kp")).distinct()
       .collect().map(r => (r.getInt(0), r.getString(1)))
@@ -684,18 +683,14 @@ object Dedup {
   }
 
   /** The persisted-index variant of the same demo split: the existing
-    * corpus's band index is STAGED ONCE per machine+scale under /tmp
-    * (atomic-rename protocol, [[Staging.stagedDir]]) and every run probes
-    * it — same accepted set as [[qDedupIncremental]], zero corpus text
-    * reads per probe (IncrementalIndexSpec pins this on scan metrics).
+    * corpus's band index is STAGED ONCE per documents file under /tmp
+    * ([[Staging.stagedFor]]) and every run probes it — same accepted set
+    * as [[qDedupIncremental]], zero corpus text reads per probe
+    * (IncrementalIndexSpec pins this on scan metrics).
     */
   def qDedupIncrementalIndexed(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // "ix_" prefix: a key starting with '_' would be invisible to Spark's
-    // file index (metadata-file convention)
-    val key = "ix_" + dir.replaceAll("[^A-Za-z0-9]+", "_")
-    val idx = Staging.stagedDir(
-        java.nio.file.Paths.get(s"/tmp/graft_band_index/$key")) { tmp =>
+    val idx = Staging.stagedFor("band_index", dir, "documents.parquet") { tmp =>
       writeBandIndex(docs.filter(col("doc_id") % 5 =!= 0)
         .select(col("doc_id"), col("text")), tmp.toString, "doc_id", "text")
     }
@@ -811,17 +806,16 @@ object Dedup {
     * coefficient) is a scalar projection over (inter, na, nb).
     */
   def shingleSetPairs(docs: DataFrame): DataFrame = {
-    // Candidates are materialized once (eager localCheckpoint; reliable
+    // Candidates are materialized once (local checkpoint; reliable
     // checkpoint(dir) on a cluster) and used twice: to semi-join the corpus
     // down to candidate MEMBERS before the shingle-set computation, and as
     // the pair stream itself. Without this, both join sides below would
     // shingle the FULL corpus and shuffle the big array columns — measured
     // 14.5s -> 4.4s at sf1 (members are a tiny fraction at any scale).
-    val cand = graft.CheckpointScope.scoped(
-      bucketPairs(minhashBandRowsOf(docs), "doc_id", "ak", "doc_a", "doc_b", 4, mhBandMatch)
-      .localCheckpoint(eager = false)) // lazy: building the PLAN must not
-    // run the candidate jobs (explain/plan-audit consumers); first action
-    // materializes once, both branches below reuse it
+    // Lazy: building the PLAN must not run the candidate jobs
+    // (explain/plan-audit consumers); the first action materializes it.
+    val cand = CheckpointScope.local(bucketPairs(minhashBandRowsOf(docs),
+      "doc_id", "ak", "doc_a", "doc_b", 4, mhBandMatch), eager = false)
     val members = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     // hashed shingle sets: the exact-Jaccard join formerly shuffled the
@@ -834,11 +828,11 @@ object Dedup {
     // d is consumed TWICE below (sha and shb sides); without its own lazy
     // checkpoint each join re-runs the corpus text scan + semi-join +
     // shingling — measured ~1.4 s of the 4.3 s sf1 total
-    val d = graft.CheckpointScope.scoped(docs
+    val d = CheckpointScope.local(docs
       .join(members, Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
-        graft.plans.ShingleSetExpr.shingleHashSetSorted(col("text"), ShingleK).as("sh"))
-      .localCheckpoint(eager = false))
+        graft.plans.ShingleSetExpr.shingleHashSetSorted(col("text"), ShingleK).as("sh")),
+      eager = false)
     cand
       .join(d.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
       .join(d.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
@@ -1127,9 +1121,9 @@ object Dedup {
     */
   def componentLabels(ids: DataFrame, idCol: String,
                       pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    var ckpt = pairs
+    var ckpt = CheckpointScope.local(pairs
       .select(least(col(aCol), col(bCol)).as("u"), greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+      .filter(col("u") =!= col("v")).distinct())
     var edges = ckpt
     var converged = false
     var round = 0
@@ -1140,9 +1134,9 @@ object Dedup {
       val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
       val lsMin = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val largeStar = sym.join(lsMin, "u")
+      val largeStar = CheckpointScope.local(sym.join(lsMin, "u")
         .filter(col("v") > col("u") && col("v") =!= col("m"))
-        .select(col("m").as("u"), col("v")).distinct().localCheckpoint()
+        .select(col("m").as("u"), col("v")).distinct())
       // small-star: every node v attaches its SMALLER neighbors (and
       // itself) to the minimum m of that set
       val ssMin = largeStar.groupBy(col("v")).agg(min(col("u")).as("m"))
@@ -1165,21 +1159,19 @@ object Dedup {
         .union(smallStar.select(col("u"), col("v"), lit(1L).as("s")))
         .groupBy(col("u"), col("v")).agg(sum(col("s")).as("d"))
         .observe(s"conv_$round", count(when(col("d") =!= 0, lit(1))).as("n"))
-      val nextCkpt = merged.localCheckpoint()
+      val nextCkpt = CheckpointScope.local(merged)
       converged = merged.queryExecution.observedMetrics
         .get(s"conv_$round").exists(_.getLong(0) == 0L)
       // the new checkpoint was materialized FROM the old one and the
       // large-star half — both dead now; free their blocks instead of
       // waiting for frame GC (guide §5)
-      Staging.releaseLocalCheckpoint(ckpt)
-      Staging.releaseLocalCheckpoint(largeStar)
+      CheckpointScope.release(ckpt)
+      CheckpointScope.release(largeStar)
       ckpt = nextCkpt
       edges = nextCkpt.filter(col("d") >= 0).select(col("u"), col("v"))
       round += 1
     }
     require(converged, s"componentLabels did not converge in $MaxStarRounds rounds")
-    // the final round's checkpoint feeds the returned label join
-    graft.CheckpointScope.scoped(ckpt): Unit
     // converged star edges are (root=u, member=v); roots and singletons
     // label themselves
     val memberLabels = edges.groupBy(col("v")).agg(min(col("u")).as("lbl"))
@@ -1391,8 +1383,7 @@ object Dedup {
     // pass would otherwise re-run the reassembly projection (order
     // discipline — sample cached blocks, not the plan); measured ~0.25 s
     // cheaper than recompute at sf1
-    graft.CheckpointScope.scoped(segmentDedup(Tables.documents(s, dir))
-      .localCheckpoint(eager = false))
+    CheckpointScope.local(segmentDedup(Tables.documents(s, dir)), eager = false)
       .orderBy(col("doc_id"))
 
   val qSegmentDedupSql: String =
@@ -1556,10 +1547,8 @@ object Dedup {
     // the windows scan honestly. The repeated-gram set is tiny (occ > 1
     // hashes only) and executor-local durability is enough — a lost
     // block just fails the query, it never corrupts it.
-    val occs = graft.CheckpointScope.scoped(
-      wins.groupBy(col("h")).agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > 1)
-      .localCheckpoint())
+    val occs = CheckpointScope.local(
+      wins.groupBy(col("h")).agg(count(lit(1)).as("occ")).filter(col("occ") > 1))
     // degenerate-gram gate: ONE light aggregation job (windows scan +
     // partial count, no token join) decides the plan shape up front —
     // the sorted path's boundary exchange is eager, and unioning it in
@@ -1688,9 +1677,7 @@ object Dedup {
     // would otherwise accumulate cached blocks until the ContextCleaner
     // happens to GC the handle (a lost checkpoint block fails the query,
     // it never corrupts it — the suffixMatchLens durability contract)
-    val res = graft.CheckpointScope.scoped(
-      s.createDataset(out).toDF("doc_id", "pos", "match_len")
-      .localCheckpoint())
+    val res = CheckpointScope.local(s.createDataset(out).toDF("doc_id", "pos", "match_len"))
     rdd.unpersist(blocking = false)
     res
   }
@@ -1759,22 +1746,20 @@ object Dedup {
     val wins = docs.select(col("doc_id"),
       posexplode(graft.plans.SegmentsExpr.shingleHashes(col("text"), minLen))
         .as(Seq("pos", "h")))
-    val occs = wins.groupBy(col("h")).agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > 1).select(col("h"))
-      .localCheckpoint()
+    val occs = CheckpointScope.local(wins.groupBy(col("h")).agg(count(lit(1)).as("occ"))
+      .filter(col("occ") > 1).select(col("h")))
     val cand = wins.join(occs, Seq("h"), "left_semi")
       .select(col("h"), col("doc_id"), col("pos").cast("long").as("pos"))
     // all token positions of docs that hold at least one candidate — a
     // suffix never crosses a doc boundary, so out-of-scope docs cannot
     // influence any comparison
     val scoped = docs.join(cand.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-    val positions = scoped
+    val positions = CheckpointScope.local(scoped
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok")))
     val total = positions.count()
-    val docLen = positions.groupBy(col("doc_id")).agg((max(col("pos")) + 1L).as("len"))
-      .localCheckpoint()
+    val docLen = CheckpointScope.local(
+      positions.groupBy(col("doc_id")).agg((max(col("pos")) + 1L).as("len")))
     // rank₁: run-start rank of the raw tokens — the same range-sort +
     // boundary-exchange round as every doubling step, so NO vocabulary
     // table exists at any |V| (the r12 broadcast form assumed |V|
@@ -1795,7 +1780,7 @@ object Dedup {
       if (nd == distinct) {
         // plateau: every surviving collision is an identical-suffix pair;
         // the unretained rank table's checkpoint blocks are dead
-        Staging.releaseLocalCheckpoint(next)
+        CheckpointScope.release(next)
         converged = true
       } else {
         cur = next; off *= 2
@@ -1813,15 +1798,14 @@ object Dedup {
     // LCP walk over the retained rank tables
     val (topW, topRank) = levels.head
     val _ = topW
-    pairs = pairs
+    pairs = CheckpointScope.local(pairs
       .join(topRank.select(col("doc_id").as("doc_a"), col("pos").as("pos_a"),
         col("rank").as("ra")), Seq("doc_a", "pos_a"))
       .join(topRank.select(col("doc_id").as("doc_b"), col("pos").as("pos_b"),
         col("rank").as("rb")), Seq("doc_b", "pos_b"))
       .withColumn("done", col("ra") === col("rb"))
       .withColumn("lcp", lit(0L))
-      .drop("ra", "rb")
-      .localCheckpoint()
+      .drop("ra", "rb"))
     // greedy descent over widths W/2…1: rank_w equality at the advanced
     // offsets proves the next w tokens equal, so lcp advances by w; a
     // past-end offset joins to nothing (null ≠ anything) and blocks.
@@ -1832,26 +1816,23 @@ object Dedup {
         col("rank").as("_ra"))
       val rb = rk.select(col("doc_id").as("_db"), col("pos").as("_pb"),
         col("rank").as("_rb"))
-      val stepped = pairs
+      val stepped = CheckpointScope.local(pairs
         .join(ra, col("doc_a") === col("_da") &&
           col("pos_a") + col("lcp") === col("_pa"), "left")
         .join(rb, col("doc_b") === col("_db") &&
           col("pos_b") + col("lcp") === col("_pb"), "left")
         .withColumn("lcp", when(!col("done") && col("_ra").isNotNull &&
           col("_ra") === col("_rb"), col("lcp") + w).otherwise(col("lcp")))
-        .drop("_da", "_pa", "_ra", "_db", "_pb", "_rb")
-        .localCheckpoint()
+        .drop("_da", "_pa", "_ra", "_db", "_pb", "_rb"))
       // each eager checkpoint supersedes the previous level's — without
       // the release a deep descent accumulates O(levels) dead pair tables
-      Staging.releaseLocalCheckpoint(pairs)
+      CheckpointScope.release(pairs)
       pairs = stepped
     }
     // the returned plan reads ONLY the final pair checkpoint: the retained
     // rank tables, token positions, doc lengths and occ filter are all dead
-    for ((_, rk) <- levels) Staging.releaseLocalCheckpoint(rk)
-    Staging.releaseLocalCheckpoint(positions)
-    Staging.releaseLocalCheckpoint(docLen)
-    Staging.releaseLocalCheckpoint(occs)
+    for ((_, rk) <- levels) CheckpointScope.release(rk)
+    Seq(positions, docLen, occs).foreach(CheckpointScope.release)
     pairs
       // done = identical suffixes (the plateau theorem): match is the
       // full remaining length; otherwise the walked lcp, capped to the
@@ -1924,9 +1905,7 @@ object Dedup {
         }
       }
     }
-    val res = graft.CheckpointScope.scoped(
-      s.createDataset(out).toDF("doc_a", "pos_a", "doc_b", "pos_b")
-      .localCheckpoint())
+    val res = CheckpointScope.local(s.createDataset(out).toDF("doc_a", "pos_a", "doc_b", "pos_b"))
     rdd.unpersist(blocking = false)
     res
   }
@@ -2028,9 +2007,7 @@ object Dedup {
         (r._1, r._2, runStart)
       }
     }
-    val res = graft.CheckpointScope.scoped(
-      s.createDataset(out).toDF("doc_id", "pos", "rank")
-      .localCheckpoint())
+    val res = CheckpointScope.local(s.createDataset(out).toDF("doc_id", "pos", "rank"))
     rdd.unpersist(blocking = false)
     res
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{CheckpointScope, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -114,15 +114,14 @@ object Multimodal {
         // payloads is a per-JVM lazy cache: 1024 encodes once per executor
         it.map(id => (id, MediaPipeline.PngFixture.payloads((id % 1024).toInt)))
       }.toDF("media_id", "payload")
-    val feats = MediaPipeline.decodeMeta(media) // real ImageIO decode + dHash
-      .select(col("media_id"), col("features"))
-      // decode ONCE: the near-dup operator references the feature frame 3×
-      // (band generation + both exact-cosine join sides); without this the
-      // plan re-runs the decode MapPartitions per reference — cheap for a
-      // parquet re-scan, not for image decode at scale
-      .localCheckpoint(eager = false)
-    val featsScoped = graft.CheckpointScope.scoped(feats)
-    Dedup.embeddingNearDupPairs(featsScoped, "media_id", "features")
+    // decode ONCE: the near-dup operator references the feature frame 3×
+    // (band generation + both exact-cosine join sides); without this the
+    // plan re-runs the decode MapPartitions per reference — cheap for a
+    // parquet re-scan, not for image decode at scale
+    val feats = CheckpointScope.local(
+      MediaPipeline.decodeMeta(media) // real ImageIO decode + dHash
+        .select(col("media_id"), col("features")), eager = false)
+    Dedup.embeddingNearDupPairs(feats, "media_id", "features")
       .select(col("id_a").as("media_a"), col("id_b").as("media_b"), col("cos"))
       .orderBy(col("media_a"), col("media_b"))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{CheckpointScope, QueryDef, Tables}
 import graft.functions.EmbeddingFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -79,11 +79,10 @@ object Similarity {
     require(k >= 1, s"mmrFromCandidates: k $k")
     val q = e.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"))
-    val cand = e.join(broadcast(candIds.select(col("vec_id"))
+    val cand = CheckpointScope.local(e.join(broadcast(candIds.select(col("vec_id"))
           .filter(col("vec_id") =!= queryId)), Seq("vec_id"), "left_semi")
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), cosine(col("embedding"), col("qe")).as("rel"))
-      .localCheckpoint()
+      .select(col("vec_id"), cosine(col("embedding"), col("qe")).as("rel")))
     val ce = e.join(broadcast(cand.select(col("vec_id"))), Seq("vec_id"))
       .select(col("vec_id"), col("embedding"))
     val sims = ce.as("a").crossJoin(broadcast(ce.as("b")))
@@ -93,7 +92,7 @@ object Similarity {
       .as[(Long, Long, Double)].collect()
       .groupBy(_._1).map { case (a, xs) => a -> xs.map(x => x._2 -> x._3).toMap }
     val rels = cand.as[(Long, Double)].collect().sortBy { case (id, r) => (-r, id) }
-    Staging.releaseLocalCheckpoint(cand)
+    CheckpointScope.release(cand)
     val selected = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
     selected += rels.head
     while (selected.size < math.min(k, rels.length)) {
@@ -484,9 +483,8 @@ object Similarity {
     // checkpoint it once so the parquet scan + scale projection run ONCE and
     // later iterations read the materialized rows (MEMORY_AND_DISK) — the
     // 4x re-scan was the whole remaining K-means overhead at sf1
-    val e = graft.CheckpointScope.scoped(Tables.embeddings(s, dir)
-      .select(col("vec_id"), scaled(col("embedding")).as("v"))
-      .localCheckpoint(eager = false))
+    val e = CheckpointScope.local(Tables.embeddings(s, dir)
+      .select(col("vec_id"), scaled(col("embedding")).as("v")), eager = false)
     var cents = e.filter(col("vec_id") < KmK)
       .select(col("vec_id").as("c_id"), col("v").as("cv"))
     var assigned: DataFrame = null
@@ -502,19 +500,18 @@ object Similarity {
         .select(col("vec_id"), col("v"),
           col("best.c_id").as("c"), col("best.dist").as("dist"))
       if (it < KmIters) {
-        // materialize the (K-row) centroid update eagerly: without the
-        // checkpoint every later iteration's broadcast subtree re-executes
-        // ALL earlier assign passes (lineage grows quadratically in iters)
-        cents = assigned
+        // checkpoint the (K-row) centroid update: without it every later
+        // iteration's broadcast subtree re-executes ALL earlier assign
+        // passes (lineage grows quadratically in iters). Lazy: lineage is
+        // cut at first materialization, so building the plan runs no job
+        cents = CheckpointScope.local(assigned
           .select(col("c"), posexplode(col("v")).as(Seq("i", "x")))
           .groupBy(col("c"), col("i"))
           .agg(round(sum(col("x")) / count(lit(1))).as("m"))
           .groupBy(col("c"))
           .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("im"))
-          .select(col("c").as("c_id"), expr("transform(im, p -> p.m)").as("cv"))
-          .localCheckpoint(eager = false) // lazy: truncates lineage at first
-        // materialization without running jobs at plan-construction time
-        cents = graft.CheckpointScope.scoped(cents)
+          .select(col("c").as("c_id"), expr("transform(im, p -> p.m)").as("cv")),
+          eager = false)
       }
     }
     assigned.select(col("vec_id"), col("c").as("cluster"), col("dist"))
@@ -619,20 +616,19 @@ object Similarity {
     */
   def pqTrain(df: DataFrame, idCol: String, vecCol: String,
       m: Int = PqM, k: Int = 8, iters: Int = 3): DataFrame = {
-    val subRows = graft.CheckpointScope.scoped(
-      pqSubRows(df, idCol, vecCol, m).localCheckpoint(eager = false))
+    val subRows = CheckpointScope.local(pqSubRows(df, idCol, vecCol, m), eager = false)
     var books = subRows.filter(col("__id") < k)
       .select(col("j"), col("__id").as("c_id"), col("subv").as("cv"))
     for (_ <- 1 to iters) {
-      books = graft.CheckpointScope.scoped(pqAssignRaw(subRows, books)
+      books = CheckpointScope.local(pqAssignRaw(subRows, books)
         .select(col("j"), col("best.c_id").as("code"),
           posexplode(col("subv")).as(Seq("i", "x")))
         .groupBy(col("j"), col("code"), col("i"))
         .agg(round(sum(col("x")) / count(lit(1))).as("mn"))
         .groupBy(col("j"), col("code"))
         .agg(array_sort(collect_list(struct(col("i"), col("mn")))).as("im"))
-        .select(col("j"), col("code").as("c_id"), expr("transform(im, p -> p.mn)").as("cv"))
-        .localCheckpoint(eager = false))
+        .select(col("j"), col("code").as("c_id"), expr("transform(im, p -> p.mn)").as("cv")),
+        eager = false)
     }
     books
   }
@@ -1770,12 +1766,8 @@ object Similarity {
     * outright at probe time, the HNSW upper-level role).
     */
   private[graft] def stagedHnswGraph(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val emb = Paths.get(dir, "embeddings.parquet")
-    val tag = s"${Files.size(emb)}_${Files.getLastModifiedTime(emb).toMillis}"
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     // v2: also stages the layer-2 graph for the 3-level descent
-    Staging.stagedDir(Paths.get(s"/tmp/graft_hnsw_graph_v2_${slug}_$tag")) { tmp =>
+    Staging.stagedFor("hnsw_graph_v2", dir, "embeddings.parquet") { tmp =>
       val e = Tables.embeddings(s, dir)
       // 2 descent rounds, same as the q_ann_nndescent entry: the ~0.79
       // edge recall this leaves is recovered at PROBE time by a wider
@@ -1976,12 +1968,8 @@ object Similarity {
   /** Auto-strided artifact staged once per corpus ([[stagedHnswGraph]]
     * protocol, its own identity key). */
   private[graft] def stagedHnswGraphAuto(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val emb = Paths.get(dir, "embeddings.parquet")
-    val tag = s"${Files.size(emb)}_${Files.getLastModifiedTime(emb).toMillis}"
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     // v2: entry table gained its seg partition (idempotent inserts)
-    Staging.stagedDir(Paths.get(s"/tmp/graft_hnsw_auto_v2_${slug}_$tag")) { tmp =>
+    Staging.stagedFor("hnsw_auto_v2", dir, "embeddings.parquet") { tmp =>
       writeHnswAutoArtifact(Tables.embeddings(s, dir), tmp.toString): Unit
     }
   }
@@ -2026,9 +2014,8 @@ object Similarity {
     // query vectors live in ONE reusable frame; every rescore job
     // broadcast-joins it, so no query vector is ever collected
     val qIdsDf = broadcast(queryIds.toDF("vec_id"))
-    val qEmb = e.join(qIdsDf, Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      .localCheckpoint() // |Q| rows; private to this invocation
+    val qEmb = CheckpointScope.local(e.join(qIdsDf, Seq("vec_id"), "left_semi")
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))) // |Q| rows
     // ONE batched exact top-1 over the entry frame for the whole batch
     val layers = hnswLayers(s, graphDir, e, levels = 2)
     val qDf = e.join(qIdsDf, Seq("vec_id"), "left_semi")
@@ -2078,7 +2065,7 @@ object Similarity {
     // the result below is built from driver-side triples — qEmb's
     // checkpoint blocks are dead; a long-lived serving session issuing
     // many batches must not accumulate |Q|-row blocks per call
-    Staging.releaseLocalCheckpoint(qEmb)
+    CheckpointScope.release(qEmb)
     queryIds.flatMap { q =>
       visited(q).toSeq.sortBy { case (id, d) => (-d, id) }.take(k)
         .zipWithIndex.map { case ((id, d), i) => (q, i + 1L, id, d) }
@@ -2469,7 +2456,7 @@ object Similarity {
     // ONE corpus-wide centroid aggregation feeds both writes (and the two
     // artifacts cannot drift even if the computation ever becomes
     // order-sensitive)
-    val cents = pqCentArr(e).localCheckpoint()
+    val cents = CheckpointScope.local(pqCentArr(e))
     e.crossJoin(broadcast(cents))
       .select(col("vec_id") +: codes: _*)
       .withColumn("b", pmod(col("vec_id"), lit(HnswBuckets)))
@@ -2478,7 +2465,7 @@ object Similarity {
     cents.select(explode(col("cents")).as("c"))
       .select(col("c.c_label").as("c_label"), col("c.cv").as("cv"))
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/cents")
-    Staging.releaseLocalCheckpoint(cents)
+    CheckpointScope.release(cents)
   }
 
   /** PQ codes sidecar from EXTERNALLY-TRAINED per-subspace codebooks —
@@ -2504,11 +2491,7 @@ object Similarity {
   }
 
   private[graft] def stagedPqCodes(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val emb = Paths.get(dir, "embeddings.parquet")
-    val tag = s"${Files.size(emb)}_${Files.getLastModifiedTime(emb).toMillis}"
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    Staging.stagedDir(Paths.get(s"/tmp/graft_pq_codes_v1_${slug}_$tag")) { tmp =>
+    Staging.stagedFor("pq_codes_v1", dir, "embeddings.parquet") { tmp =>
       writePqCodes(Tables.embeddings(s, dir), tmp.toString)
     }
   }

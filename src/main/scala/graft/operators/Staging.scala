@@ -34,6 +34,19 @@ object Staging {
     root.toString
   }
 
+  /** [[stagedDir]] for an artifact built from the input `dir/file`: the
+    * root `/tmp/graft_<name>_<dir>_<size>_<mtime>` names the input's
+    * directory, byte size and modification time, so rewriting the input
+    * at the same path stages a fresh artifact instead of reusing the one
+    * built from the old bytes.
+    */
+  def stagedFor(name: String, dir: String, file: String)(build: Path => Unit): String = {
+    val in = Path.of(dir, file)
+    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val tag = s"${Files.size(in)}_${Files.getLastModifiedTime(in).toMillis}"
+    stagedDir(Path.of(s"/tmp/graft_${name}_${slug}_$tag"))(build)
+  }
+
   /** Pid-keyed scratch dir under /tmp, sweeping siblings left by DEAD
     * pids as a side effect. The per-process self-check staging dirs (BPE
     * merges/encode, ODIM ingest) are fresh-per-pid by design and must
@@ -78,38 +91,6 @@ object Staging {
       } finally s.close()
     } catch { case scala.util.control.NonFatal(_) => }
     s"/tmp/${prefix}_p$self"
-  }
-
-  /** `RDD.unpersist` WARNs ("... was locally checkpointed, its lineage has
-    * been truncated and cannot be recomputed after unpersisting") on every
-    * locally-checkpointed RDD it releases. Releasing DEAD per-invocation
-    * checkpoints is exactly this module's lifecycle — the frame is never
-    * read again by design — so the warning is expected and pure noise
-    * (thousands of lines per `sbt test` run before this). Raise that ONE
-    * logger to ERROR, once, on first release; everything else in
-    * org.apache.spark.rdd still logs normally.
-    */
-  private[graft] lazy val quietCheckpointRelease: Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Free the blocks behind a `localCheckpoint`ed frame once it is dead
-    * (superseded by a later checkpoint, or the caller's result no longer
-    * reads it). `Dataset.unpersist` only clears CacheManager entries —
-    * checkpoint blocks live on the internal RDD inside the frame's
-    * LogicalRDD, so that is what must be unpersisted. A non-checkpoint
-    * frame is a no-op. Never call this on a frame a returned LAZY plan
-    * still depends on — a lost checkpoint block fails the query.
-    */
-  private[graft] def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit = {
-    quietCheckpointRelease
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false): Unit
-      case _ => ()
-    }
   }
 
   private def deleteRecursively(p: Path): Unit = {

@@ -1187,11 +1187,7 @@ object TextOps {
   }
 
   private[graft] def stagedImpactIndex(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val doc = Paths.get(dir, "documents.parquet")
-    val tag = s"${Files.size(doc)}_${Files.getLastModifiedTime(doc).toMillis}"
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    Staging.stagedDir(Paths.get(s"/tmp/graft_impact_index_${slug}_$tag")) { tmp =>
+    Staging.stagedFor("impact_index", dir, "documents.parquet") { tmp =>
       writeImpactIndex(
         Tables.documents(s, dir).select(col("doc_id"), col("text")), tmp.toString)
     }
@@ -1230,11 +1226,7 @@ object TextOps {
   }
 
   private[graft] def stagedTermIndex(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val doc = Paths.get(dir, "documents.parquet")
-    val tag = s"${Files.size(doc)}_${Files.getLastModifiedTime(doc).toMillis}"
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    Staging.stagedDir(Paths.get(s"/tmp/graft_term_index_${slug}_$tag")) { tmp =>
+    Staging.stagedFor("term_index", dir, "documents.parquet") { tmp =>
       writeTermIndex(
         Tables.documents(s, dir).select(col("doc_id"), col("text")), tmp.toString)
     }
@@ -1254,11 +1246,7 @@ object TextOps {
     * [[stagedTermIndex]]) for the probe-only MaxScore entry.
     */
   private[graft] def stagedPackedTermIndex(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val doc = Paths.get(dir, "documents.parquet")
-    val tag = s"${Files.size(doc)}_${Files.getLastModifiedTime(doc).toMillis}"
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    Staging.stagedDir(Paths.get(s"/tmp/graft_packed_index_${slug}_$tag")) { tmp =>
+    Staging.stagedFor("packed_index", dir, "documents.parquet") { tmp =>
       writePackedTermIndex(
         Tables.documents(s, dir).select(col("doc_id"), col("text")), tmp.toString)
     }
@@ -1478,11 +1466,7 @@ object TextOps {
     * protocol, its own identity key).
     */
   private[graft] def stagedDocShardedIndex(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val doc = Paths.get(dir, "documents.parquet")
-    val tag = s"${Files.size(doc)}_${Files.getLastModifiedTime(doc).toMillis}"
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    Staging.stagedDir(Paths.get(s"/tmp/graft_docshard_index_${slug}_$tag")) { tmp =>
+    Staging.stagedFor("docshard_index", dir, "documents.parquet") { tmp =>
       writeDocShardedIndex(
         Tables.documents(s, dir).select(col("doc_id"), col("text")), tmp.toString)
     }

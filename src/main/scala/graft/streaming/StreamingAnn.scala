@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.CheckpointScope
 import graft.operators.Similarity
 
 /** Streaming vector ingest into a persisted ANN graph — the serving-side
@@ -44,9 +45,9 @@ object StreamingAnn {
       (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val seg = s"b$batchId"
-        // pinned before either write: the graph append must not lazily
-        // re-read a corpus directory this batch is itself mutating
-        val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
+        // checkpointed before either write: the graph append must not
+        // lazily re-read a corpus directory this batch is itself mutating
+        val b = CheckpointScope.local(batch.select(col("vec_id"), col("embedding")))
         val old = s.read.parquet(corpusDir)
           .filter(col("ingest_batch") =!= seg)
           .select(col("vec_id"), col("embedding"))
@@ -55,6 +56,7 @@ object StreamingAnn {
         b.write.mode("overwrite").parquet(s"$corpusDir/ingest_batch=$seg")
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           Similarity.compactAnnGraph(s, indexDir, r, preserveSegs = Set(seg))
+        CheckpointScope.drain()
     }
 
   /** Marker file an auto-artifact ingest leaves once the corpus outgrows
@@ -88,7 +90,7 @@ object StreamingAnn {
       (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val seg = s"b$batchId"
-        val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
+        val b = CheckpointScope.local(batch.select(col("vec_id"), col("embedding")))
         val old = s.read.parquet(corpusDir)
           .filter(col("ingest_batch") =!= seg)
           .select(col("vec_id"), col("embedding"))
@@ -108,5 +110,6 @@ object StreamingAnn {
           try out.write(s"n=$n bound=$bound stride=$st\n".getBytes("UTF-8"))
           finally out.close()
         }
+        CheckpointScope.drain()
     }
 }

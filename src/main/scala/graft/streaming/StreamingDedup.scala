@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.CheckpointScope
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -123,9 +124,9 @@ object StreamingDedup {
     * sees batch N as existing corpus. This is the streaming form of the
     * accept-then-append protocol IncrementalIndexSpec pins for batch.
     *
-    * The kept set is pinned with an eager localCheckpoint BEFORE either
-    * write: the index append must not re-run the probe plan against the
-    * index directory it is itself mutating.
+    * The kept set is checkpointed eagerly BEFORE either write: the index
+    * append must not re-run the probe plan against the index directory it
+    * is itself mutating. The batch drains its checkpoints when it ends.
     *
     * Crash/replay semantics: both writes are batchId-keyed and IDEMPOTENT,
     * so with a checkpointLocation the accepted sink is exactly-once across
@@ -147,10 +148,9 @@ object StreamingDedup {
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val seg = s"b$batchId"
-        val kept = Dedup.incrementalKeptIndexed(
+        val kept = CheckpointScope.local(Dedup.incrementalKeptIndexed(
             batch.sparkSession, indexDir, batch, idCol, textCol,
-            excludeSeg = Some(seg))
-          .localCheckpoint()
+            excludeSeg = Some(seg)))
         kept.write.mode("overwrite").parquet(s"$acceptedDir/ingest_batch=$seg")
         Dedup.appendBandIndex(kept, indexDir, idCol, textCol,
           seg = seg, overwriteSeg = true)
@@ -163,6 +163,7 @@ object StreamingDedup {
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           Dedup.compactBandIndex(batch.sparkSession, indexDir,
             preserveSegs = Set(seg))
+        CheckpointScope.drain()
     }
 
   /** Unbounded-ingest variant: bucket state expires after `stateTtl` of

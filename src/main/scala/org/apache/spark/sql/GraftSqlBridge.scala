@@ -19,6 +19,12 @@ object GraftSqlBridge {
     children => execution.aggregate.ScalaAggregator(udaf, children)
   }
 
+  /** `RDD.unpersist(blocking = false)` without its per-RDD "was locally
+    * checkpointed" WARN: the checkpoint lifecycle frees only dead frames.
+    */
+  def unpersistQuietly(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   def plan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.DataFrame].queryExecution.analyzed
 

@@ -123,6 +123,23 @@ class CliSpec extends AnyFunSuite {
       "UTF-8").split("\n").length == 1 + 3 * 25)
   }
 
+  test("both CLIs reject an unknown option or an option with no value before any work") {
+    def usageError(run: => Unit): String = intercept[IllegalArgumentException](run).getMessage
+    // a typo of --modified-days-ago would otherwise run the default 2-day window
+    val typo = usageError(Vph5ToVpts.run(spark, Array("--bucket", "/nope",
+      "--inventory", "/nope.csv", "--modified-day-ago", "0")))
+    assert(typo.contains("unknown option --modified-day-ago"), typo)
+    assert(usageError(Vph5ToVpts.run(spark, Array("--bucket", "/nope",
+      "--inventory", "/nope.csv", "--coverage"))).contains("option --coverage needs a value"))
+    assert(usageError(Vph5ToVpts.run(spark, Array("--bucket", "--inventory", "/nope.csv")))
+      .contains("option --bucket needs a value"))
+    // main parses before it builds (and at exit stops) a session
+    assert(usageError(TransferBaltrad.main(Array("--lake_source", "x", "--source", "/nope")))
+      .contains("unknown option --lake_source"))
+    assert(usageError(TransferBaltrad.main(Array("--source", "/nope", "--destination")))
+      .contains("option --destination needs a value"))
+  }
+
   test("CLI failures publish a reference-format alert and re-raise (K7 seam)") {
     class Collecting extends Alerting.AlertSink {
       val got = scala.collection.mutable.ArrayBuffer.empty[(String, String)]

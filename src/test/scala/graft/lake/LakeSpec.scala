@@ -149,6 +149,29 @@ class LakeSpec extends AnyFunSuite {
     assert(s3Monthly.sameElements(fileMonthly), "monthly gzip differs via mocks3://")
   }
 
+  test("each monthly gzip holds only its own month when the bucket path holds a month's digits") {
+    // the month is matched in the daily file NAME: under a bucket named
+    // lake_202303, a match on the whole path would put April's daily
+    // file into March's gzip
+    val bucketDir = "lake_202303"
+    val files = Seq(("03", "11"), ("04", "02")).flatMap { case (mm, dd) =>
+      Seq("000000", "000500").map(t => graft.vpts.VpLakeFixture.VpFile(
+        s"$bucketDir/baltrad/hdf5/nosta/2023/$mm/$dd", "nosta", s"2023$mm$dd", t, 0))
+    }
+    val bucket = graft.vpts.VpLakeFixture.fullLake(files).resolve(bucketDir).toString
+    val days = Seq(("03", "11"), ("04", "02")).map { case (mm, dd) =>
+      LakeController.DayKey("baltrad", "nosta", "2023", mm, dd)
+    }
+    assert(LakeController.rebuild(spark, bucket, days) == ((2, 2)))
+    for (mm <- Seq("03", "04")) {
+      val month = LakeController.MonthKey("baltrad", "nosta", "2023", mm)
+      val rows = gunzip(Paths.get(month.monthlyCsvPath(bucket))).split("\n").toSeq.tail
+      // 2 profiles x 25 levels, every one dated in the month
+      assert(rows.size == 2 * 25, s"2023-$mm")
+      assert(rows.forall(_.split(",")(1).startsWith(s"2023-$mm-")), s"2023-$mm")
+    }
+  }
+
   test("the lake writer overwrites its own days only, and leaves the session's overwrite mode static") {
     import spark.implicits._
     val key = "spark.sql.sources.partitionOverwriteMode"
